@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main. Runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line:
-  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
+  * {"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"sf":...}
+  * A query that throws on any run is listed under `failed` and carries no
+  * timing.
   *
   * Each query is forced end-to-end with a noop-format write (a plain count()
   * would let Catalyst prune the expensive projections out of the plan).
@@ -56,19 +58,30 @@ object Bench {
     val selected =
       if (only.isEmpty) SparkEntry.queries.toSeq
       else SparkEntry.queries.filter(q => only(q._1)).toSeq
-    val results = selected.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
+    // A query that throws is a FAILURE, never a timing: it is listed under
+    // "failed" on the line and left out of the total, the medians and the
+    // noise summary (a broken query must not read as a fast one).
+    val outcomes = selected.sortBy(_._1).map { case (name, fn) =>
+      def once(): Option[Double] = {
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          None
         }
-        (System.nanoTime() - t0) / 1e9
       }
       System.gc()
-      val warmup = once() // discarded
-      val timed = Seq.fill(nRuns.getOrElse(
-        if (warmup > 10.0) 3 else if (warmup > 2.0) 2 else 3))(once())
+      val timed = once().flatMap { warmup => // discarded
+        val runs = Seq.fill(nRuns.getOrElse(
+          if (warmup > 10.0) 3 else if (warmup > 2.0) 2 else 3))(once())
+        if (runs.forall(_.isDefined)) Some(runs.flatten) else None
+      }
+      name -> timed
+    }
+    val failed = outcomes.collect { case (name, None) => name }
+    val results = outcomes.collect { case (name, Some(timed)) =>
       val sorted = timed.sorted
       val median =
         if (sorted.size % 2 == 1) sorted(sorted.size / 2)
@@ -95,8 +108,9 @@ object Bench {
     val runs = results.map { case (k, _, _, t) =>
       "\"" + k + "\":" + t.map(v => f"$v%.3f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runs,$noise,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runs,"failed":$failedJson,$noise,"sf":"$sfDir"}"""
     println(line)
     // ALSO persist the full line: the driver captures only the tail of
     // stdout, so at 100+ queries the printed line gets beheaded in the

@@ -33,25 +33,25 @@ class IvfIndex private (
 
   private def dataPath = s"$path/data"
 
+  private def layout = IvfIndex.dataLayout(path)
+
+  /** The IVF layout's lifecycle when an epoch log governs it (catalog
+    * stores, [[SemDedupIndex]]); None for a log-less standalone build.
+    */
+  private[graft] def store: Option[graft.operators.EpochStore] =
+    log.map(graft.operators.EpochStore(_, Seq(layout)))
+
   /** The store scan, resolved through the epoch log when one governs this
     * index ([[graft.sources.VectorStoreCatalog]] epoch stores): only
     * COMMITTED `data/epoch=N` directories are read, so a crashed
     * (un-committed) append is invisible rather than half-visible. Log-less
-    * (legacy/standalone) layouts read the flat directory as before. The
-    * epoch partition column is dropped so readers see the same schema
-    * either way; list_id partition pruning works identically (the pruning
-    * filter matches inside every committed epoch directory).
+    * (standalone) layouts read the flat directory. Epochs committed before
+    * the index existed have no index-side directory (their rows are
+    * covered by the build's epoch) and are skipped. list_id partition
+    * pruning works identically either way.
     */
-  private[graft] def storeDf: DataFrame = log match {
-    case None =>
-      if (flatReadSchema != null) spark.read.schema(flatReadSchema).parquet(dataPath)
-      else {
-        val first = spark.read.parquet(dataPath)
-        flatReadSchema = first.schema
-        first
-      }
-    case Some(l) => readEpochDirs(l.layoutPaths(dataPath))
-  }
+  private[graft] def storeDf: DataFrame = graft.operators.EpochStore.read(
+    spark, layout, log.fold(Seq(dataPath))(_.layoutPaths(dataPath)))
 
   /** [[storeDf]] pinned at a committed snapshot epoch — the IVF side of the
     * [[graft.operators.EpochIndex.storedLayoutAt]] time-travel discipline:
@@ -67,22 +67,19 @@ class IvfIndex private (
   private[graft] def storeDfAt(maxEpoch: Long): DataFrame = {
     requirePin(maxEpoch)
     val paths = log.get.layoutPathsAt(dataPath, maxEpoch)
-    val hfs = new org.apache.hadoop.fs.Path(dataPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val present = paths.filter(p =>
-      hfs.exists(new org.apache.hadoop.fs.Path(p)))
+    val present = graft.operators.EpochStore.existing(spark, layout, paths)
     if (present.isEmpty && paths.nonEmpty)
       throw new IllegalStateException(
         s"index layout does not cover epoch $maxEpoch: the index was " +
           "built at a later epoch, so pre-build pins have no index-side " +
           "slices — serve this pin from the store scan (the catalog's " +
           "query(asOf) falls back to it automatically) or rebuild")
-    readEpochDirs(present)
+    graft.operators.EpochStore.read(spark, layout, present)
   }
 
   /** Addressable snapshot pins — the committed epoch set (a previous
-    * vacuum's fold slice is itself a valid pin). Log-less (legacy/
-    * standalone) layouts have a single implicit epoch and no pins.
+    * vacuum's fold slice is itself a valid pin). Log-less (standalone)
+    * layouts have a single implicit epoch and no pins.
     */
   def epochs: Seq[Long] = log.map(_.committedEpochs()).getOrElse(Seq.empty)
 
@@ -92,7 +89,7 @@ class IvfIndex private (
   private[graft] def requirePin(epoch: Long): Unit = {
     require(log.isDefined,
       "time-travel pins need an epoch-logged index; this layout has no " +
-        "commit log (legacy/standalone build)")
+        "commit log (standalone build)")
     val live = epochs
     require(live.contains(epoch),
       s"epoch $epoch is not in the committed history (live pins: " +
@@ -100,99 +97,19 @@ class IvfIndex private (
         "rewrite may have expired it")
   }
 
-  // Inferred read schema, captured once per instance: parquet schema
-  // inference submits a small Spark job per spark.read, and the serving
-  // path re-reads this layout on every call — the layout's schema is
-  // fixed at build time (appends write the same columns), so one
-  // inference serves the instance's lifetime. Keyed by layout form
-  // (epoch-sliced reads carry the epoch partition column, flat reads do
-  // not).
-  @volatile private var epochReadSchema: org.apache.spark.sql.types.StructType = _
-  @volatile private var flatReadSchema: org.apache.spark.sql.types.StructType = _
-
-  private def readEpochDirs(paths: Seq[String]): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(dataPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // epochs committed before the index existed have no index-side
-    // directory (their rows are covered by the index build's epoch)
-    val dirs = paths.filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("vector",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.FloatType), nullable = true),
-          org.apache.spark.sql.types.StructField("list_id",
-            org.apache.spark.sql.types.IntegerType, nullable = false))))
-    else {
-      val rd = spark.read.option("basePath", dataPath)
-      val df =
-        if (epochReadSchema != null) rd.schema(epochReadSchema).parquet(dirs: _*)
-        else {
-          val first = rd.parquet(dirs: _*)
-          epochReadSchema = first.schema
-          first
-        }
-      df.drop("epoch")
-    }
-  }
-
   /** Epoch retention for the IVF layout — [[graft.operators.EpochIndex
-    * .vacuum]]'s lever on the vector side, closing the one lifecycle
-    * asymmetry the text/media families' r15 work left open: a long-lived
-    * embedding ingest stream accumulates one `data/epoch=N` directory per
-    * micro-batch, and `compact()`'s full rewrite was the only counter.
-    * Folds every committed epoch below the newest `keepLast` into ONE
-    * cluster-partitioned slice (O(folded slices), not O(index)), commits
-    * atomically via [[graft.operators.EpochLog.commitVacuum]], and expires
-    * the originals — query results unchanged by construction (same rows,
-    * same `list_id` partitioning; partition pruning inside the fold slice
-    * works exactly as in any append slice). Returns epochs folded; 0 when
-    * history is within `keepLast` or the layout has no log.
+    * .vacuum]]'s lever on the vector side: a long-lived embedding ingest
+    * stream accumulates one `data/epoch=N` directory per micro-batch, and
+    * `compact()`'s full rewrite was the only counter. Folds every committed
+    * epoch below the newest `keepLast` into ONE list-partitioned slice
+    * (O(folded slices), not O(index)) through [[graft.operators.EpochStore
+    * .vacuum]] — query results unchanged by construction (same rows, same
+    * `list_id` partitioning). Returns epochs folded; 0 when history is
+    * within `keepLast` or the layout has no log.
     */
-  def vacuum(keepLast: Int): Int = log match {
-    case None =>
-      require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-      0 // a log-less flat layout has exactly one implicit epoch
-    case Some(l) =>
-      // EpochIndex.vacuum's discipline: sweep crash-orphaned epoch
-      // directories before planning the fold
-      l.sweepOrphanDirs(dataPath)
-      val (foldSet, boundary) = l.vacuumPlan(keepLast) match {
-        case None => return 0
-        case Some(plan) => plan
-      }
-      val nUnits = l.rowsOf(foldSet.toSet)
-      val target = l.nextEpoch()
-      val fs = new org.apache.hadoop.fs.Path(dataPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // shared-log epochs with no index-side directory (store-only commits
-      // predating the index) fold to nothing on THIS layout — the commit
-      // still expires them so the boundary advances in lockstep
-      val dirs = foldSet.map(e => s"$dataPath/epoch=$e")
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-      if (dirs.nonEmpty)
-        // one O(fold) shuffle on list_id before the dynamic-partition
-        // write: the fold reads MANY tiny per-epoch cluster directories
-        // (epochs x clusters input splits), and an unshuffled write would
-        // emit up to tasks x clusters files — the small-file disease the
-        // fold exists to cure. Repartitioned, each cluster lands in one
-        // task and the slice consolidates to ~one file per cluster
-        // (VacuumProbe, 800k x 64f tail shape: unshuffled fold 7.8 s vs
-        // compact 10.3 s — overhead-bound at 1.3x; repartitioned 3.4 s
-        // vs 9.8 s, the 2.9x folded-bytes economics the lever promises).
-        spark.read.option("basePath", dataPath).parquet(dirs: _*)
-          .drop("epoch")
-          .repartition(col("list_id"))
-          .write.mode("overwrite").partitionBy("list_id")
-          .parquet(s"$dataPath/epoch=$target")
-      l.commitVacuum(target, boundary, nUnits)
-      foldSet.foreach(e => l.deleteDir(s"$dataPath/epoch=$e"))
-      epochReadSchema = null // re-infer after a write (EpochIndex discipline)
-      foldSet.size
+  def vacuum(keepLast: Int): Int = {
+    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
+    store.flatMap(_.vacuum(keepLast)).fold(0)(_.epochs.size)
   }
 
   /** Probe-list column for a vector column. */
@@ -369,48 +286,31 @@ class IvfIndex private (
     * imbalance warrants it.
     */
   def append(rows: DataFrame, idCol: String = "id", vecCol: String = "vector"): Long =
-    log match {
+    store match {
       case None =>
-        val assigned = assign(rows, idCol, vecCol)
         // row count observed inside the write pass — a trailing rows.count()
         // would re-run the (arbitrary) upstream lineage a second time
         val obs = org.apache.spark.sql.Observation()
-        assigned.observe(obs, count(lit(1)).as("n"))
+        assign(rows, idCol, vecCol).observe(obs, count(lit(1)).as("n"))
           .write.mode("append").partitionBy("list_id").parquet(dataPath)
-        flatReadSchema = null // re-infer after a write (EpochIndex discipline)
         obs.get("n").asInstanceOf[Long]
-      case Some(l) =>
+      case Some(s) =>
         // epoch-governed layout: write-then-commit, so a crash mid-write
         // leaves an invisible orphan the next append overwrites
-        val epoch = l.nextEpoch()
-        val n = appendEpoch(rows, idCol, vecCol, epoch)
-        l.commit(epoch, "add", n)
-        n
+        s.append(s.writeSlice(Seq(assign(rows, idCol, vecCol)), _))._2
     }
 
-  private def assign(rows: DataFrame, idCol: String, vecCol: String): DataFrame = {
+  /** The index-layout rows of `rows`: (id, vector, list_id[, meta]), each
+    * row assigned to its nearest list — the frame a composite owner
+    * ([[graft.sources.VectorStoreCatalog]]) hands its [[graft.operators
+    * .EpochStore]] next to the store slice, so both land under one commit.
+    */
+  private[graft] def assign(rows: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val meta = if (rows.columns.contains("meta")) Seq(col("meta")) else Seq.empty
     rows.select(Seq(
       col(idCol).cast("long").as("id"),
       col(vecCol).as("vector"),
       probes(col(vecCol), 1).getItem(0).as("list_id")) ++ meta: _*)
-  }
-
-  /** Write an append batch under an explicit epoch directory WITHOUT
-    * committing it — the seam a composite owner ([[graft.sources
-    * .VectorStoreCatalog.addVectors]]) uses to make a store append and an
-    * index append visible through ONE commit row in a SHARED log. Overwrite
-    * mode: the directory may hold an orphan from a failed attempt at this
-    * same epoch number.
-    */
-  private[graft] def appendEpoch(
-      rows: DataFrame, idCol: String, vecCol: String, epoch: Long): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    assign(rows, idCol, vecCol).observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"$dataPath/epoch=$epoch")
-    epochReadSchema = null // re-infer after a write (EpochIndex discipline)
-    obs.get("n").asInstanceOf[Long]
   }
 
   /** Per-list occupancy — the balance signal for deciding when to rebuild. */
@@ -878,8 +778,7 @@ object IvfIndex {
   // Spark write/read jobs was pure scheduler overhead — 2 jobs per build
   // plus 2-3 per uncached load plus 2 per maintenance/advisory read
   // (r19 measurement). Written aside + renamed into place, one file per
-  // dir; legacy parquet dirs (pre-r19 builds in long-lived JVMs) read
-  // through the old path.
+  // dir.
 
   private def writeJsonAside(spark: SparkSession, dir: String,
       name: String, lines: Seq[String]): Unit = {
@@ -906,13 +805,8 @@ object IvfIndex {
     Some(files.flatMap { f =>
       val in = fs.open(f.getPath)
       val text =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val b = new Array[Byte](8192)
-          var n = in.read(b)
-          while (n >= 0) { buf.write(b, 0, n); n = in.read(b) }
-          new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
+        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        finally in.close()
       text.split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq
     })
   }
@@ -923,33 +817,29 @@ object IvfIndex {
     """\{"list_id":(\d+),"centroid":\[([^\]]*)\]\}""".r
 
   private[ml] def readBuildCount(spark: SparkSession, path: String): Option[Long] =
-    readJsonLines(spark, buildMetaPath(path)) match {
-      case Some(lines) => lines.headOption.collect {
-        case BuildMetaRe(n, _) => n.toLong
-      }
-      case None => // legacy parquet buildmeta (pre-r19 build in this JVM)
-        try {
-          spark.read.parquet(buildMetaPath(path))
-            .select(col("n_at_build")).collect().headOption.map(_.getLong(0))
-        } catch { case _: org.apache.spark.sql.AnalysisException => None }
-    }
+    readBuildMeta(spark, path).map(_._1)
 
-  /** Metric recorded at build time; None for indexes written before the
-    * metric was persisted (their callers must declare it at load).
-    */
+  /** Metric recorded at build time. */
   private[ml] def readBuildMetric(spark: SparkSession, path: String): Option[String] =
-    readJsonLines(spark, buildMetaPath(path)) match {
-      case Some(lines) => lines.headOption.collect {
-        case BuildMetaRe(_, m) => m
-      }
-      case None =>
-        try {
-          val meta = spark.read.parquet(buildMetaPath(path))
-          if (meta.columns.contains("metric"))
-            meta.select(col("metric")).collect().headOption.map(_.getString(0))
-          else None
-        } catch { case _: org.apache.spark.sql.AnalysisException => None }
-    }
+    readBuildMeta(spark, path).map(_._2)
+
+  private def readBuildMeta(spark: SparkSession, path: String): Option[(Long, String)] =
+    readJsonLines(spark, buildMetaPath(path)).flatMap(_.headOption.collect {
+      case BuildMetaRe(n, m) => (n.toLong, m)
+    })
+
+  /** The IVF data layout under an index `path` — one definition shared by
+    * every reader and writer of it (the index itself and the catalog that
+    * commits its slices next to the store's).
+    */
+  private[graft] def dataLayout(path: String): graft.operators.EpochStore.Layout = {
+    import org.apache.spark.sql.types._
+    graft.operators.EpochStore.Layout(s"$path/data", graft.operators.EpochStore.Lists,
+      emptySchema = Some(StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("vector", ArrayType(FloatType), nullable = true),
+        StructField("list_id", IntegerType, nullable = false)))))
+  }
 
   /** Distributed index build. Input df must carry (idCol, vecCol[, meta]).
     * Writes `{path}/data/list_id=*` partitioned parquet and
@@ -1025,7 +915,8 @@ object IvfIndex {
       log: Option[graft.operators.EpochLog]): IvfIndex = {
     val spark = df.sparkSession
     val idx = new IvfIndex(spark, path, cents, metric, log)
-    val meta = if (df.columns.contains("meta")) Seq(col("meta")) else Seq.empty
+    // a rebuild rewrites the data layout: re-infer its read schema
+    graft.operators.EpochStore.forgetSchemas(s"$path/")
     // log-governed builds land the full dataset under the NEWEST committed
     // epoch of the owning log (the input df is exactly the committed rows),
     // so index reads resolve that one directory plus later append epochs;
@@ -1037,10 +928,7 @@ object IvfIndex {
     }
     // build-time row count observed inside the write pass (single pass over
     // user lineage) — it anchors maintenance()'s appendedFraction signal
-    val projected = df.select(Seq(
-      col(idCol).cast("long").as("id"),
-      col(vecCol).as("vector"),
-      idx.probes(col(vecCol), 1).getItem(0).as("list_id")) ++ meta: _*)
+    val projected = idx.assign(df, idCol, vecCol)
     // A NARROW input (one small parquet file plans as one partition)
     // otherwise writes every list's file from a single task, sequentially
     // — per-file open/commit cost × nLists on one core. Hash-clustering
@@ -1118,10 +1006,9 @@ object IvfIndex {
           case other => throw new IllegalStateException(
             s"corrupt centroid line under $path/centroids: $other")
         }.sortBy(_._1).map(_._2).toArray
-      case None => // legacy parquet centroids (pre-r19 build in this JVM)
-        spark.read.parquet(s"$path/centroids")
-          .orderBy("list_id").collect()
-          .map(_.getSeq[Double](1).toArray)
+      case None => throw new IllegalStateException(
+        s"no centroids.jsonl under $path/centroids (an absent index or an " +
+          "unsupported legacy parquet format); rebuild the index")
     }
     new IvfIndex(spark, path, cents, resolved, log)
   }

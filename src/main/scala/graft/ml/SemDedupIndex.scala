@@ -161,21 +161,13 @@ object SemDedupIndex {
     def vacuum(keepLast: Int): Int = ivf.vacuum(keepLast)
 
     /** Rewrite live epochs into one — the explicit batch maintenance job
-      * ([[graft.operators.FingerprintIndex.compact]] discipline): read the
-      * committed corpus, land it under a fresh epoch, commit it as a
-      * replace (the atomic cutover), then delete the superseded
-      * directories. `dedupBatch` output is unchanged (spec-asserted).
+      * ([[graft.operators.FingerprintIndex.compact]] discipline): the
+      * committed corpus lands under a fresh epoch as one replace commit
+      * ([[graft.operators.EpochStore.replace]]). `dedupBatch` output is
+      * unchanged (spec-asserted).
       */
-    def compact(): Unit = ivf.log.foreach { log =>
-      if (log.committedEpochs().lengthCompare(1) <= 0) return
-      val target = log.nextEpoch()
-      val obs = org.apache.spark.sql.Observation()
-      ivf.storeDf.observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").partitionBy("list_id")
-        .parquet(s"$path/data/epoch=$target")
-      val stale = log.committedEpochs()
-      log.commit(target, "replace", obs.get("n").asInstanceOf[Long])
-      stale.foreach(e => log.deleteDir(s"$path/data/epoch=$e"))
+    def compact(): Unit = ivf.store.foreach { s =>
+      if (s.log.committedEpochs().lengthCompare(1) > 0) s.replace(Seq(ivf.storeDf))
     }
 
     private def assignBatch(

@@ -60,7 +60,8 @@ abstract class MediaSetIndex extends EpochIndex {
   protected def fingerprints(media: Dataset[MediaRow]): DataFrame
 
   def fpsPath: String = layoutDir("fps")
-  override protected def layoutNames: Seq[String] = Seq("fps", "sizes")
+  // sizes first: its rows are the documents, the commit-log unit
+  override protected def layoutNames: Seq[String] = Seq("sizes", "fps")
 
   def storedFps(): DataFrame = storedLayout("fps")
   def storedSizes(): DataFrame = storedLayout("sizes")
@@ -74,23 +75,12 @@ abstract class MediaSetIndex extends EpochIndex {
   private[multimodal] def writeSlice(media: Dataset[MediaRow], epoch: Long): Long =
     writeFps(fingerprints(media).localCheckpoint(true), epoch)
 
-  private def writeFps(fp: DataFrame, epoch: Long): Long = {
-    // sizes derive from the already-checkpointed fp in one aggregation —
-    // a second checkpoint plus a trailing count() cost two extra jobs per
-    // append. The document count rides the sizes write as an Observation
-    // (its only loss mode is a zero-row slice, where 0 is the true count).
-    val sizes = fp.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val obs = org.apache.spark.sql.Observation()
-    // concurrent layout writes over the same pinned blocks (see
-    // FingerprintIndex.writeFp)
-    EpochIndex.awaitAll(
-      () => EpochIndex.writeLayoutSlice(fp, s"$fpsPath/epoch=$epoch",
-        buckets = 0),
-      () => EpochIndex.writeLayoutSlice(
-        sizes.observe(obs, count(lit(1)).as("docs")),
-        s"${layoutDir("sizes")}/epoch=$epoch", buckets = 0))
-    scala.util.Try(obs.get("docs").asInstanceOf[Long]).getOrElse(0L)
-  }
+  // sizes derive from the already-checkpointed fp in one aggregation, and
+  // the document count rides the sizes write (concurrent with the fps
+  // write over the same pinned blocks)
+  private def writeFps(fp: DataFrame, epoch: Long): Long =
+    store.writeSlice(Seq(fp.groupBy(col("id")).agg(count(lit(1)).as("n")), fp),
+      epoch)
 
   /** Which batch media are near-dups of an INDEXED one: (batch_id,
     * corpus_id, shared, size_b, size_c, jaccard) with jaccard >=
@@ -227,7 +217,7 @@ abstract class MediaSetIndex extends EpochIndex {
   }
 
   override protected def compactionFrames(): Seq[DataFrame] =
-    Seq(storedFps(), storedSizes())
+    Seq(storedSizes(), storedFps())
 
   // the commit log counts MEDIA DOCUMENTS (writeFps' invariant); the
   // primary layout holds several fp rows per document

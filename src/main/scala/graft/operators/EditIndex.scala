@@ -96,12 +96,9 @@ case class EditIndex(
     docs.select(col(idCol).cast("long").as("id"),
       col(textCol).as("title"), blockExpr(docs).as("block"))
 
-  private[operators] def writeSlice(slim: DataFrame, epoch: Long): Long = {
-    val mat = slim.localCheckpoint(true)
-    val n = mat.count()
-    EpochIndex.writeLayoutSlice(mat, s"$titlesPath/epoch=$epoch", buckets = 0)
-    n
-  }
+  /** One observed write: the row count rides the slice write itself. */
+  private[operators] def writeSlice(slim: DataFrame, epoch: Long): Long =
+    store.writeSlice(Seq(slim), epoch)
 
   /** Which batch titles sit within `maxEdits` of an INDEXED title:
     * (batch_id, corpus_id, dist). Delegates the whole candidate + verify

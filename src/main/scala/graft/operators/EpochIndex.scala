@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
@@ -32,15 +32,6 @@ private[graft] trait EpochIndex {
 
   protected def layoutDir(name: String): String = s"$path/$name"
 
-  /** Committed rows of one layout — orphan epochs from failed appends are
-    * invisible ([[EpochLog]] resolves directories from the commit log,
-    * never the filesystem). A gather-bucketed layout must be read with an
-    * explicit basePath: its `gb=K` directories sit under each `epoch=N`
-    * root, and multi-root partition inference would otherwise refuse the
-    * two-level structure; basePath makes BOTH partition columns explicit
-    * and the synthetic `epoch` one is dropped (only committed epoch paths
-    * are passed, so orphan invisibility is unchanged).
-    */
   /** Per-layout parquet read options. A family whose layout schema GAINED
     * a column across versions (EditIndex's `block`) must set
     * `mergeSchema=true` here: a plain read infers the schema from one
@@ -49,44 +40,21 @@ private[graft] trait EpochIndex {
     */
   protected def layoutReadOptions(name: String): Map[String, String] = Map.empty
 
-  // Inferred-once layout read schemas (the r19 IvfIndex discipline):
-  // parquet schema inference submits a small Spark job per spark.read,
-  // and dedup/serving calls re-read these fixed layouts constantly. Only
-  // layouts with NO extra read options cache — a mergeSchema family
-  // (EditIndex's versioned titles layout) derives its schema from the
-  // exact file set read, which pinned subsets legitimately change.
-  // The cache is JVM-GLOBAL, keyed by the layout's absolute directory
-  // (lifecycle paths construct several fresh instances over the SAME
-  // directories, and each per-instance cache paid the whole inference
-  // round again); every write through any instance invalidates that
-  // instance's directory prefix, the same single-JVM-writer discipline
-  // the idx/readSchema caches document.
-  private def invalidateLayoutSchemas(): Unit =
-    EpochIndex.invalidateLayoutSchemasUnder(s"$path/")
+  private def layout(name: String): EpochStore.Layout = EpochStore.Layout(
+    layoutDir(name),
+    if (gatherBucketsFor(name) > 0) EpochStore.Buckets(gatherBucketsFor(name))
+    else EpochStore.Plain(),
+    layoutReadOptions(name))
 
-  private def readLayout(name: String, paths: Seq[String]): DataFrame = {
-    val opts = layoutReadOptions(name)
-    val bucketed = gatherBucketsFor(name) > 0
-    val dir = layoutDir(name)
-    def reader = {
-      val r = spark.read.options(opts)
-      if (bucketed) r.option("basePath", dir) else r
-    }
-    val cache = EpochIndex.layoutSchemaCache
-    val df =
-      if (opts.nonEmpty || paths.isEmpty) reader.parquet(paths: _*)
-      else cache.synchronized(cache.get(dir)) match {
-        case Some(s) => reader.schema(s).parquet(paths: _*)
-        case None =>
-          val first = reader.parquet(paths: _*)
-          cache.synchronized(cache(dir) = first.schema)
-          first
-      }
-    if (bucketed) df.drop("epoch") else df
-  }
+  /** The family's lifecycle: every layout in [[layoutNames]] order. */
+  protected lazy val store: EpochStore = EpochStore(log, layoutNames.map(layout))
 
+  /** Committed rows of one layout — orphan epochs from failed appends are
+    * invisible ([[EpochLog]] resolves directories from the commit log,
+    * never the filesystem).
+    */
   protected def storedLayout(name: String): DataFrame =
-    readLayout(name, log.layoutPaths(layoutDir(name)))
+    EpochStore.read(spark, layout(name), log.layoutPaths(layoutDir(name)))
 
   /** [[storedLayout]] pinned at a snapshot epoch — the index-family twin
     * of [[graft.sources.VectorStoreCatalog.loadAt]]: only committed
@@ -94,7 +62,7 @@ private[graft] trait EpochIndex {
     * the pin reaches past its boundary ([[EpochLog.layoutPathsAt]]).
     */
   protected def storedLayoutAt(name: String, maxEpoch: Long): DataFrame =
-    readLayout(name, log.layoutPathsAt(layoutDir(name), maxEpoch))
+    EpochStore.read(spark, layout(name), log.layoutPathsAt(layoutDir(name), maxEpoch))
 
   /** Addressable snapshot pins: the committed epoch set (a previous
     * vacuum's fold slice is itself a valid pin — the vacuum-time
@@ -120,13 +88,7 @@ private[graft] trait EpochIndex {
     * commit row then makes all layouts visible together. Returns that
     * count.
     */
-  protected def appendEpoch(write: Long => Long): Long = {
-    val epoch = log.nextEpoch()
-    val n = write(epoch)
-    log.commit(epoch, "add", n)
-    invalidateLayoutSchemas()
-    n
-  }
+  protected def appendEpoch(write: Long => Long): Long = store.append(write)._2
 
   /** Frames to persist on compaction, one per layout in [[layoutNames]]
     * order — a family re-distincts here when appends may duplicate rows.
@@ -143,12 +105,6 @@ private[graft] trait EpochIndex {
     */
   protected def gatherBucketsFor(name: String): Int = 0
 
-  /** Rewrite all committed epochs into one — query results are unchanged by
-    * construction (same rows, one directory per layout). The replace commit
-    * is the atomic cutover; dead epoch directories are deleted best-effort
-    * afterwards (a crash between the two leaves harmless invisible
-    * orphans).
-    */
   /** Override to commit a DIFFERENT row count than the primary layout's
     * raw row count on compaction — for families whose commit-log unit is
     * not one-row-per-layout-row (WinnowIndex logs DOCUMENTS while its fps
@@ -159,29 +115,15 @@ private[graft] trait EpochIndex {
     */
   protected def compactionCommitCount(): Option[Long] = None
 
+  /** Rewrite all committed epochs into one — query results are unchanged by
+    * construction (same rows, one directory per layout). The replace commit
+    * is the atomic cutover ([[EpochStore.replace]]).
+    */
   def compact(): Unit = {
     if (log.committedEpochs().lengthCompare(1) <= 0) return
     val unitCount = compactionCommitCount()
-    val target = log.nextEpoch()
-    val obs = Observation()
-    // per-layout rewrites are independent reads of disjoint layouts into
-    // disjoint directories — run them concurrently (the writeFp
-    // discipline); the replace commit below is the only visibility point
-    EpochIndex.awaitAll(layoutNames.zip(compactionFrames()).zipWithIndex.map {
-      case ((name, df), i) => () => {
-        val counted = if (i == 0) df.observe(obs, count(lit(1)).as("n")) else df
-        EpochIndex.writeLayoutSlice(counted,
-          s"${layoutDir(name)}/epoch=$target", gatherBucketsFor(name))
-      }
-    }: _*)
-    val stale = log.committedEpochs()
-    // a zero-row bucketed rewrite can be AQE-propagated away before the
-    // metric fires — an empty layout compacts to count 0
-    log.commit(target, "replace", unitCount.getOrElse(
-      scala.util.Try(obs.get("n").asInstanceOf[Long]).getOrElse(0L)))
-    stale.foreach(e => layoutNames.foreach(n =>
-      log.deleteDir(s"${layoutDir(n)}/epoch=$e")))
-    invalidateLayoutSchemas()
+    store.replace(compactionFrames(), n => unitCount.getOrElse(n))
+    ()
   }
 
   /** Epoch retention for index families — the
@@ -209,41 +151,8 @@ private[graft] trait EpochIndex {
     * number of epochs folded; no-op 0 when history is already within
     * `keepLast`.
     */
-  def vacuum(keepLast: Int): Int = {
-    // opportunistic orphan sweep FIRST: a prior crash between a
-    // replace/vacuum commit and its deleteDir loop leaves dead epoch
-    // directories no reader lists and nothing else ever reclaims
-    log.sweepOrphanDirs(layoutNames.map(layoutDir))
-    val (foldSet, boundary) = log.vacuumPlan(keepLast) match {
-      case None => return 0
-      case Some(plan) => plan
-    }
-    val nUnits = log.rowsOf(foldSet.toSet)
-    val target = log.nextEpoch()
-    // per-layout folds are independent (disjoint sources, disjoint
-    // targets) — run them concurrently, the compact()/writeFp discipline
-    EpochIndex.awaitAll(layoutNames.map { name => () => {
-      val dir = layoutDir(name)
-      val paths = foldSet.map(e => s"$dir/epoch=$e")
-      val reader = spark.read.options(layoutReadOptions(name))
-      // the storedLayout read convention: basePath (which resolves the
-      // two-level epoch/gb partition structure) ONLY for gather-bucketed
-      // layouts — on a flat layout the partition-discovery read path
-      // measurably costs ~2x the plain multi-root scan on wide rows
-      // (shingle-hash arrays), for a column the fold immediately drops
-      val df =
-        if (gatherBucketsFor(name) <= 0) reader.parquet(paths: _*)
-        else reader.option("basePath", dir).parquet(paths: _*)
-          .drop("epoch").drop("gb") // writeLayoutSlice re-buckets
-      EpochIndex.writeLayoutSlice(df, s"$dir/epoch=$target",
-        gatherBucketsFor(name))
-    }}: _*)
-    log.commitVacuum(target, boundary, nUnits)
-    foldSet.foreach(e => layoutNames.foreach(n =>
-      log.deleteDir(s"${layoutDir(n)}/epoch=$e")))
-    invalidateLayoutSchemas()
-    foldSet.size
-  }
+  def vacuum(keepLast: Int): Int =
+    store.vacuum(keepLast).fold(0)(_.epochs.size)
 
   /** Remove documents from the index by id — the right-to-be-forgotten /
     * takedown operator that completes the lifecycle (append, compact,
@@ -278,27 +187,10 @@ private[graft] trait EpochIndex {
     require(!frames.head.isEmpty,
       "deleteIds would remove every remaining document; drop the index " +
         "directory instead of emptying it")
-    val target = log.nextEpoch()
-    val obs = Observation()
-    // independent per-layout rewrites, run concurrently (see compact)
-    EpochIndex.awaitAll(layoutNames.zip(frames).zipWithIndex.map {
-      case ((name, df), i) => () => {
-        val counted = if (i == 0) df.observe(obs, count(lit(1)).as("n")) else df
-        EpochIndex.writeLayoutSlice(counted,
-          s"${layoutDir(name)}/epoch=$target", gatherBucketsFor(name))
-      }
-    }: _*)
-    val stale = log.committedEpochs()
     // recompute the commit unit over the FILTERED rows for families whose
     // unit is not raw layout rows (WinnowIndex/VideoIndex count docs)
-    val unitAfter = unitCounted match {
-      case Some(_) => deleteCommitCount(frames)
-      case None => scala.util.Try(obs.get("n").asInstanceOf[Long]).getOrElse(0L)
-    }
-    log.commit(target, "replace", unitAfter)
-    stale.foreach(e => layoutNames.foreach(n =>
-      log.deleteDir(s"${layoutDir(n)}/epoch=$e")))
-    invalidateLayoutSchemas()
+    val (_, unitAfter) = store.replace(frames,
+      n => unitCounted.fold(n)(_ => deleteCommitCount(frames)))
     unitBefore - unitAfter
   }
 
@@ -396,23 +288,6 @@ private[graft] trait EpochIndex {
 }
 
 private[graft] object EpochIndex {
-
-  /** JVM-global inferred-layout-schema cache, keyed by layout directory —
-    * see the instance-side comment at `readLayout`. Bounded defensively
-    * (layout dirs are few per index; a long-lived JVM churning temp
-    * indexes just re-infers after a clear).
-    */
-  private[operators] val layoutSchemaCache = scala.collection.mutable.HashMap
-    .empty[String, org.apache.spark.sql.types.StructType]
-
-  private[operators] def invalidateLayoutSchemasUnder(prefix: String): Unit =
-    layoutSchemaCache.synchronized {
-      if (layoutSchemaCache.size > 4096) layoutSchemaCache.clear()
-      else layoutSchemaCache.filterInPlace { case (dir, _) =>
-        !dir.startsWith(prefix)
-      }
-      ()
-    }
 
   /** Compaction triggers: epoch-directory proliferation (every read lists
     * and opens one directory per append) and appended fraction (mirrors
@@ -594,14 +469,21 @@ private[graft] object EpochIndex {
     * the guide's overlap-independent-jobs pattern for a family's
     * multi-layout slice writes (each reads the same pinned blocks and
     * lands in its own directory; visibility is the later commit row, so
-    * concurrency changes nothing observable). Exceptions propagate.
+    * concurrency changes nothing observable). Every action finishes before
+    * this returns or throws: a caller that saw an error and retried into
+    * the same uncommitted epoch must not race a sibling still writing
+    * there. The first error (in action order) is rethrown, the others
+    * attached to it as suppressed.
     */
   def awaitAll(actions: (() => Unit)*): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(actions.map(a => Future(a()))),
-      scala.concurrent.duration.Duration(600, "s"))
-    ()
+    val errors = actions.map(a => Future(a())).flatMap(f =>
+      scala.util.Try(Await.result(f, scala.concurrent.duration.Duration.Inf))
+        .failed.toOption)
+    errors.headOption.foreach { first =>
+      errors.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 }

@@ -62,39 +62,19 @@ private[graft] case class EpochLog(spark: SparkSession, path: String) {
       val files = listLogFiles()
       val fs = new org.apache.hadoop.fs.Path(commitsPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // LEGACY fallback: a pre-JSONL log wrote (epoch, action, n_rows)
-      // parquet part files. Read them through Spark once and merge —
-      // a store persisted before the format change must stay readable
-      // (the IvfIndex buildmeta/centroids discipline). Legacy rows sort
-      // before same-epoch JSONL rows (stable sort, and legacy files
-      // strictly predate the JSONL era).
-      val (legacy, jsonl) = files.partition(_.getName.endsWith(".parquet"))
-      val legacyRows: Seq[Commit] =
-        if (legacy.isEmpty) Seq.empty
-        else spark.read.parquet(legacy.map(_.toString): _*)
-          .select("epoch", "action", "n_rows")
-          .collect()
-          .map(r => Commit(r.getLong(0), r.getString(1), r.getLong(2)))
-          .toSeq.sortBy(_.epoch)
       // cross-file order of same-epoch rows is the commit order: the
       // monotonic sequence prefix in the filename, never the
       // filesystem's listing order over random UUIDs (pre-sequence
       // files sort first — they predate any sequenced write)
-      val jsonRows = jsonl.sortBy(f => (seqOf(f.getName), f.getName))
+      files.sortBy(f => (seqOf(f.getName), f.getName))
         .flatMap { f =>
           val in = fs.open(f)
           val text =
-            try {
-              val out = new java.io.ByteArrayOutputStream()
-              val buf = new Array[Byte](8192)
-              var n = in.read(buf)
-              while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-              new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-            } finally in.close()
+            try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+            finally in.close()
           text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
             .map(parseLine).toSeq
-        }
-      (legacyRows ++ jsonRows).sortBy(_.epoch)
+        }.sortBy(_.epoch)
     }
     def isMissingFile(t: Throwable): Boolean =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
@@ -122,7 +102,7 @@ private[graft] case class EpochLog(spark: SparkSession, path: String) {
   }
 
   /** Monotonic sequence parsed from a commit filename; -1 for pre-sequence
-    * (or legacy) names, which sort first.
+    * names, which sort first.
     */
   private def seqOf(name: String): Long = name match {
     case SeqRe(s) => s.toLong
@@ -153,9 +133,14 @@ private[graft] case class EpochLog(spark: SparkSession, path: String) {
         s"commit-log rename failed: $tmp -> $name under $commitsPath")
   }
 
-  /** Start a fresh log containing exactly epoch 0 as a replace (build). */
-  def reset(nRows: Long): Unit =
+  /** Start a fresh log containing exactly epoch 0 as a replace (build).
+    * The layouts under `path` were just rewritten by that build, so their
+    * cached read schemas are dropped ([[EpochStore.forgetSchemas]]).
+    */
+  def reset(nRows: Long): Unit = {
+    EpochStore.forgetSchemas(s"$path/")
     write(Seq(Commit(0L, "replace", nRows)), "overwrite")
+  }
 
   /** Record `epoch` as committed (the atomic visibility point). A
     * "replace" commit also prunes the log itself: every earlier commit row
@@ -199,11 +184,21 @@ private[graft] case class EpochLog(spark: SparkSession, path: String) {
   private def listLogFiles(): Seq[org.apache.hadoop.fs.Path] = {
     val dir = new org.apache.hadoop.fs.Path(commitsPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-        && !s.getPath.getName.startsWith("."))
-      .map(_.getPath)
+    val files =
+      if (!fs.exists(dir)) Seq.empty
+      else fs.listStatus(dir).toSeq
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
+          && !s.getPath.getName.startsWith("."))
+        .map(_.getPath)
+    // a pre-JSONL log wrote parquet part files; no persisted store uses
+    // that format, so every read and commit fails loudly instead of
+    // decoding (or appending next to) half a log
+    files.find(_.getName.endsWith(".parquet")).foreach { f =>
+      throw new IllegalStateException(
+        s"unsupported legacy parquet commit log under $commitsPath ($f); " +
+          "rebuild the index or store")
+    }
+    files
   }
 
   /** The resolved liveness state: live epochs, plus the active vacuum fold
@@ -276,14 +271,6 @@ private[graft] case class EpochLog(spark: SparkSession, path: String) {
     * from) and prune the directories after.
     */
   def allEpochs(): Seq[Long] = readCommits().map(_.epoch).distinct.sorted
-
-  /** Dead epochs (below the newest replace) — compaction's cleanup list. */
-  def deadEpochs(): Seq[Long] = {
-    val cs = readCommits()
-    val base = cs.filter(_.action == "replace").map(_.epoch)
-      .reduceOption(_ max _).getOrElse(Long.MinValue)
-    cs.map(_.epoch).filter(_ < base).distinct.sorted
-  }
 
   /** The next epoch number to write (orphans from failed appends are
     * reused and overwritten, so gaps never accumulate).
@@ -367,15 +354,9 @@ private[graft] case class EpochLog(spark: SparkSession, path: String) {
     * discipline no in-flight write exists; the [[nextEpoch]] number is
     * excluded anyway (an uncommitted append parked there is overwritten
     * by the next writer — the log's documented self-healing — and must
-    * not be raced by a sweep). Returns the swept epoch numbers.
-    */
-  def sweepOrphanDirs(layoutPath: String): Seq[Long] =
-    sweepOrphanDirs(Seq(layoutPath))
-
-  /** Multi-layout form: ONE commit-log read serves every layout's sweep
-    * (live set and nextEpoch derive from the same snapshot) — catalog
-    * vacuum sweeps its store and index layouts in one call instead of
-    * paying four log reads before the fold plan's own.
+    * not be raced by a sweep). ONE commit-log read serves every layout's
+    * sweep (live set and nextEpoch derive from the same snapshot).
+    * Returns the swept epoch numbers.
     */
   def sweepOrphanDirs(layoutPaths: Seq[String]): Seq[Long] = {
     val cs = readCommits()

@@ -69,25 +69,10 @@ case class FingerprintIndex(
     */
   private def writeFp(fp0: DataFrame, epoch: Long): Long = {
     val fp = fp0.localCheckpoint(true)
-    // row count observed inside the docs write — a separate fp.count()
-    // was one extra scheduled job + plan per append. An Observation on a
-    // zero-row bucketed write can be AQE-propagated away, but the only
-    // value it can lose is 0, which IS the count of a zero-row slice
-    // (compact()'s Try/getOrElse discipline).
-    val obs = org.apache.spark.sql.Observation()
-    // the two layout writes read the same pinned blocks and land in
-    // different directories — submit them concurrently so the second
-    // write's tasks back-fill the first's tail (guide: overlap
-    // independent jobs; both are epoch-local, the commit row is the
-    // only visibility point either way)
-    EpochIndex.awaitAll(
-      () => EpochIndex.writeLayoutSlice(
-        fp.select(col("id"), col("shingle_hashes"))
-          .observe(obs, count(lit(1)).as("n")),
-        s"$docsPath/epoch=$epoch", gatherBuckets),
-      () => FingerprintIndex.banded(fp, bands, numHashes / bands)
-        .write.mode("overwrite").parquet(s"$bandsPath/epoch=$epoch"))
-    scala.util.Try(obs.get("n").asInstanceOf[Long]).getOrElse(0L)
+    // both layout writes read the same pinned blocks and land
+    // concurrently; the row count is observed inside the docs write
+    store.writeSlice(Seq(fp.select(col("id"), col("shingle_hashes")),
+      FingerprintIndex.banded(fp, bands, numHashes / bands)), epoch)
   }
 
   /** Which batch documents near-duplicate an INDEXED document:

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted 64-bit-fingerprint index — [[FingerprintIndex]]'s sibling for
@@ -69,15 +69,10 @@ case class HammingIndex(
       fps: DataFrame, idCol: String, fpCol: String, epoch: Long): Long = {
     val slim = fps.select(col(idCol).cast("long").as("id"),
       col(fpCol).cast("long").as("fp")).localCheckpoint(true)
-    val obs = Observation()
     // concurrent layout writes over the same pinned blocks (see
     // FingerprintIndex.writeFp)
-    EpochIndex.awaitAll(
-      () => slim.observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$fpsPath/epoch=$epoch"),
-      () => HammingIndex.banded(slim.select(col("fp")).distinct(), nBands)
-        .write.mode("overwrite").parquet(s"$bandsPath/epoch=$epoch"))
-    obs.get("n").asInstanceOf[Long]
+    store.writeSlice(Seq(slim,
+      HammingIndex.banded(slim.select(col("fp")).distinct(), nBands)), epoch)
   }
 
   /** Which batch rows near-duplicate an INDEXED row:

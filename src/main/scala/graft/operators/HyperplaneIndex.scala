@@ -136,21 +136,10 @@ case class HyperplaneIndex(
   /** One signature pass feeds both layouts (the writeSlice discipline). */
   private def writeSigned(signed0: DataFrame, epoch: Long): Long = {
     val signed = signed0.localCheckpoint(true)
-    // row count observed inside the vecs write (one job fewer per append);
-    // an Observation on a zero-row bucketed write can be AQE-propagated
-    // away, but the only value it can lose is 0 — the true count of a
-    // zero-row slice (see FingerprintIndex.writeFp)
-    val obs = org.apache.spark.sql.Observation()
     // concurrent layout writes over the same pinned blocks (see
     // FingerprintIndex.writeFp)
-    EpochIndex.awaitAll(
-      () => EpochIndex.writeLayoutSlice(
-        signed.select(col("id"), col("vec"))
-          .observe(obs, count(lit(1)).as("n")),
-        s"$vecsPath/epoch=$epoch", gatherBuckets),
-      () => banded(signed.select((col("id") +: sigNames.map(col)): _*))
-        .write.mode("overwrite").parquet(s"$bandsPath/epoch=$epoch"))
-    scala.util.Try(obs.get("n").asInstanceOf[Long]).getOrElse(0L)
+    store.writeSlice(Seq(signed.select(col("id"), col("vec")),
+      banded(signed.select((col("id") +: sigNames.map(col)): _*))), epoch)
   }
 
   /** Which batch vectors near-duplicate an INDEXED vector:

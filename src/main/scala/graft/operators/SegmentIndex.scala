@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted segment-hash index — the standing-corpus state of incremental
@@ -48,11 +48,8 @@ case class SegmentIndex(
 
   private[operators] def writeSlice(
       docs: DataFrame, textCol: String, epoch: Long): Long = {
-    val obs = Observation()
-    Dedup.segmentHashes(docs, textCol, delimiter, minSegmentLen)
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$segsPath/epoch=$epoch")
-    obs.get("n").asInstanceOf[Long]
+    store.writeSlice(
+      Seq(Dedup.segmentHashes(docs, textCol, delimiter, minSegmentLen)), epoch)
   }
 
   /** Clean a batch against the stored segment set:

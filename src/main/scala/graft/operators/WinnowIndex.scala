@@ -52,7 +52,7 @@ case class WinnowIndex(
   private def writeFps(fp0: DataFrame, epoch: Long): Long = {
     val fp = fp0.localCheckpoint(true)
     val n = fp.select(col("id")).distinct().count()
-    EpochIndex.writeLayoutSlice(fp, s"$fpsPath/epoch=$epoch", buckets = 0)
+    store.writeSlice(Seq(fp), epoch)
     n
   }
 

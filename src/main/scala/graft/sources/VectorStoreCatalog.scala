@@ -57,20 +57,50 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     s"${storePath(userId, modelId)}/data"
 
   // ── epoch-committed layout ─────────────────────────────────────────────
-  // New stores write `data/epoch=N` slices governed by ONE EpochLog at
+  // Every store writes `data/epoch=N` slices governed by ONE EpochLog at
   // `_epochs/` that ALSO governs the IVF index's `_ivf/data/epoch=N`
   // slices: a store append and its index append become visible through a
   // single commit row (all-or-nothing), so a crash between the two writes
-  // can no longer leave store and index permanently out of sync — the
-  // FingerprintIndex/HammingIndex/SegmentIndex discipline applied to the
-  // vector side. Stores written before this layout (flat `data/` parquet,
-  // no `_epochs/`) stay on the legacy plain-append path end to end.
+  // can no longer leave store and index permanently out of sync. Both
+  // layouts commit through one [[graft.operators.EpochStore]]; a missing
+  // `_epochs/` reads as an empty log.
   private def epochsPath(userId: String, modelId: String) =
     s"${storePath(userId, modelId)}/_epochs"
-  private def epochMode(userId: String, modelId: String): Boolean =
-    fs.exists(new Path(epochsPath(userId, modelId)))
   private def storeLog(userId: String, modelId: String): graft.operators.EpochLog =
     graft.operators.EpochLog(spark, epochsPath(userId, modelId))
+  private def dataLayout(userId: String, modelId: String,
+      targetFileBytes: Long = 0L) =
+    graft.operators.EpochStore.Layout(dataPath(userId, modelId),
+      graft.operators.EpochStore.Plain(targetFileBytes),
+      emptySchema = Some(StoreSchema))
+  /** The store's lifecycle: the data layout, then the IVF layout (which
+    * gets a slice only while an index exists). `targetFileBytes` sizes the
+    * data layout's vacuum fold.
+    */
+  private def epochStore(userId: String, modelId: String,
+      targetFileBytes: Long = 0L): graft.operators.EpochStore =
+    graft.operators.EpochStore(storeLog(userId, modelId), Seq(
+      dataLayout(userId, modelId, targetFileBytes),
+      graft.ml.IvfIndex.dataLayout(indexPath(userId, modelId))))
+  /** The slices of one commit: the store rows, plus their IVF assignment
+    * when an index exists.
+    */
+  private def slicesOf(userId: String, modelId: String, cfg: StoreConfig,
+      hasIndex: Boolean, rows: DataFrame): Seq[DataFrame] =
+    rows +: (if (hasIndex) Seq(idxLoad(userId, modelId, cfg).assign(rows, "id", "vector"))
+      else Nil)
+  /** A store whose `data/` holds flat parquet but whose log is empty was
+    * written before the epoch layout; nothing reads that format any more.
+    * Checked only where the log is empty, so serving calls pay nothing.
+    */
+  private def requireEpochLayout(userId: String, modelId: String): Unit = {
+    val p = new Path(dataPath(userId, modelId))
+    if (fs.exists(p) && fs.listStatus(p).exists(st =>
+        st.isFile && st.getPath.getName.endsWith(".parquet")))
+      throw new IllegalStateException(
+        s"unsupported pre-epoch store $userId/$modelId: $p holds flat " +
+          "parquet and no epoch log; rebuild the store")
+  }
   private def hasIvf(userId: String, modelId: String, cfg: StoreConfig): Boolean =
     cfg.indexType == "ivf" &&
       fs.exists(new Path(s"${indexPath(userId, modelId)}/centroids"))
@@ -92,7 +122,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     idxCache.synchronized {
       idxCache.getOrElseUpdate((userId, modelId),
         graft.ml.IvfIndex.load(spark, indexPath(userId, modelId), cfg.metric,
-          if (epochMode(userId, modelId)) Some(storeLog(userId, modelId)) else None))
+          Some(storeLog(userId, modelId))))
     }
 
   def exists(userId: String, modelId: String): Boolean =
@@ -145,50 +175,22 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     // ids come from monotonically_increasing_id (nondeterministic): pin the
     // batch once so the store write and the index append see identical rows
     val out = if (hasIndex) validated.localCheckpoint(true) else validated
-    // legacy = a pre-epoch store (flat data/, no _epochs marker); everything
-    // else — including a brand-new store's first append — is epoch mode
-    val legacy = !epochMode(userId, modelId) &&
-      fs.exists(new Path(dataPath(userId, modelId)))
-    if (legacy) {
-      // count observed inside the write pass — a trailing rows.count() would
-      // re-run the (arbitrary) input lineage a second time
-      val obs = org.apache.spark.sql.Observation()
-      out.observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        .write.mode("append").parquet(dataPath(userId, modelId))
-      // incremental ANN maintenance: assign + append the same batch to the
-      // IVF index if one exists (reference rebuilds the whole graph here —
-      // service/optimized_vector_store.py:110-113; ours is O(batch))
-      if (hasIndex) {
-        idxLoad(userId, modelId, cfg).append(out)
-      }
-      // Advance the id base by a generous stride; monotonically_increasing_id
-      // uses the upper 31 bits for the partition, so 2^33 per leaves headroom.
-      writeConfig(cfgPath, cfg, idBase + (1L << 40))
-      obs.get("n").asInstanceOf[Long]
-    } else {
-      // the _epochs marker flips the store to epoch mode BEFORE any data
-      // lands: a crash after this mkdir leaves an empty log = empty store
-      if (!epochMode(userId, modelId)) fs.mkdirs(new Path(epochsPath(userId, modelId)))
-      val log = storeLog(userId, modelId)
+    val store = epochStore(userId, modelId)
+    val (epoch, n) = store.append { epoch =>
+      if (epoch == 0L) requireEpochLayout(userId, modelId)
       // advance the id base BEFORE the writes: burning a stride on a failed
       // append is harmless (ids skip), but advancing after the commit could
-      // crash in between and re-mint colliding ids on the retry
+      // crash in between and re-mint colliding ids on the retry.
+      // monotonically_increasing_id uses the upper 31 bits for the
+      // partition, so 2^33 per leaves headroom.
       writeConfig(cfgPath, cfg, idBase + (1L << 40))
-      val epoch = log.nextEpoch()
-      val obs = org.apache.spark.sql.Observation()
-      out.observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        .write.mode("overwrite")
-        .parquet(s"${dataPath(userId, modelId)}/epoch=$epoch")
-      // same batch into the index's epoch slice — visible only via the ONE
-      // commit row below, together with the store slice or not at all
-      if (hasIndex) {
-        idxLoad(userId, modelId, cfg).appendEpoch(out, "id", "vector", epoch)
-      }
-      val n = obs.get("n").asInstanceOf[Long]
-      log.commit(epoch, "add", n)
-      maintainMetaStats(userId, modelId, epoch)
-      n
+      // incremental ANN maintenance: the same batch lands in the index's
+      // slice (reference rebuilds the whole graph here —
+      // service/optimized_vector_store.py:110-113; ours is O(batch))
+      store.writeSlice(slicesOf(userId, modelId, cfg, hasIndex, out), epoch)
     }
+    maintainMetaStats(userId, modelId, epoch)
+    n
   }
 
   /** Append-path statistics maintenance: when meta stats exist and were
@@ -207,17 +209,14 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     */
   private def maintainMetaStats(
       userId: String, modelId: String, epoch: Long): Unit = {
-    val old = metaStatsFrame(userId, modelId).getOrElse(return)
-    val stamped = old.agg(max(col("stats_epoch"))).head()
-    if (stamped.isNullAt(0)) return
-    val before = storeLog(userId, modelId).committedEpochs()
-      .filter(_ < epoch).lastOption.getOrElse(-1L)
-    if (stamped.getLong(0) != before) return // already stale: refresh re-arms
+    // already stale: refresh re-arms
+    val old = statsStampedAt(userId, modelId, storeLog(userId, modelId)
+      .committedEpochs().filter(_ < epoch).lastOption.getOrElse(-1L))
+      .getOrElse(return)
     // count the batch from the slice JUST WRITTEN, never from the caller's
     // lineage: re-executing an arbitrary (possibly nondeterministic) input
     // a second time could stamp counts that differ from the committed rows
-    val batchCounts = spark.read
-      .parquet(s"${dataPath(userId, modelId)}/epoch=$epoch")
+    val batchCounts = sliceAt(userId, modelId, epoch)
       .select(explode(col("meta")).as(Seq("key", "value")))
       .groupBy(col("key"), col("value"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
@@ -233,6 +232,22 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     publishMetaStats(userId, modelId)(tmp =>
       merged.write.mode("overwrite").parquet(tmp))
   }
+
+  /** The store rows one commit just wrote: its `epoch` slice. */
+  private def sliceAt(userId: String, modelId: String, epoch: Long): DataFrame =
+    graft.operators.EpochStore.read(spark, dataLayout(userId, modelId),
+      Seq(dataLayout(userId, modelId).slice(epoch)))
+
+  /** The published stats when they are stamped at `epoch` (fresh as of
+    * it); None when absent or stale. `epoch` is evaluated only when stats
+    * exist, so a store without statistics pays no log read here.
+    */
+  private def statsStampedAt(
+      userId: String, modelId: String, epoch: => Long): Option[DataFrame] =
+    metaStatsFrame(userId, modelId).filter { stats =>
+      val stamped = stats.agg(max(col("stats_epoch"))).head()
+      !stamped.isNullAt(0) && stamped.getLong(0) == epoch
+    }
 
   /** One NULL-key stamp row carried in every published stats table: it
     * keeps `max(stats_epoch)` defined even when the store has no
@@ -280,12 +295,9 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     */
   private def rearmMetaStatsFromSlice(
       userId: String, modelId: String, prevLast: Long, epoch: Long): Unit = {
-    val stamped = metaStatsFrame(userId, modelId).getOrElse(return)
-      .agg(max(col("stats_epoch"))).head()
-    if (stamped.isNullAt(0) || stamped.getLong(0) != prevLast) return
+    statsStampedAt(userId, modelId, prevLast).getOrElse(return)
     // stamp-as-seed-row: see [[statsStampSeed]]
-    val counts = spark.read
-      .parquet(s"${dataPath(userId, modelId)}/epoch=$epoch")
+    val counts = sliceAt(userId, modelId, epoch)
       .select(explode(col("meta")).as(Seq("key", "value")))
       .unionByName(statsStampSeed())
       .groupBy(col("key"), col("value"))
@@ -305,9 +317,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     */
   private def reStampMetaStats(
       userId: String, modelId: String, prevLast: Long, epoch: Long): Unit = {
-    val old = metaStatsFrame(userId, modelId).getOrElse(return)
-    val stamped = old.agg(max(col("stats_epoch"))).head()
-    if (stamped.isNullAt(0) || stamped.getLong(0) != prevLast) return
+    val old = statsStampedAt(userId, modelId, prevLast).getOrElse(return)
     val restamped = old.filter(col("key").isNotNull).drop("stats_epoch")
       .withColumn("stats_epoch", lit(epoch))
       .unionByName(statsStampRow(epoch))
@@ -414,81 +424,27 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     } else exactScan
   }
 
-  /** Scan (reference _load_store, service/optimized_vector_store.py:225-239).
-    * An empty store yields an empty, correctly-typed DataFrame.
+  /** Scan (reference _load_store, service/optimized_vector_store.py:225-239):
+    * only committed epoch slices — an un-committed (crashed) append is
+    * structurally invisible. An empty store yields an empty,
+    * correctly-typed DataFrame.
     */
-  // Inferred store-read schema, captured once per (store, layout form):
-  // parquet schema inference submits a small Spark job per spark.read,
-  // and serving calls re-read the store constantly — the store schema is
-  // fixed by [[addVectors]]'s writer for the store's whole lifetime, so
-  // one inference serves every later read (epoch-sliced reads carry the
-  // epoch partition column; legacy flat reads do not).
-  private val readSchemaCache =
-    scala.collection.mutable.HashMap.empty[(String, String, Boolean), StructType]
-
-  // clear()/drop() end the "schema fixed for the store's lifetime"
-  // guarantee the cache rests on — a store recreated with a different
-  // column shape must re-infer, exactly the idxInvalidate discipline
-  private def readSchemaInvalidate(userId: String, modelId: String): Unit =
-    readSchemaCache.synchronized {
-      readSchemaCache.remove((userId, modelId, true))
-      readSchemaCache.remove((userId, modelId, false))
-      ()
-    }
-
-  private def epochSlicesDf(
-      userId: String, modelId: String, p: String,
-      dirs: Seq[String]): DataFrame = {
-    val key = (userId, modelId, true)
-    val cached = readSchemaCache.synchronized(readSchemaCache.get(key))
-    val rd = spark.read.option("basePath", p)
-    val df = cached match {
-      case Some(s) => rd.schema(s).parquet(dirs: _*)
-      case None =>
-        val first = rd.parquet(dirs: _*)
-        readSchemaCache.synchronized(readSchemaCache(key) = first.schema)
-        first
-    }
-    df.drop("epoch")
-  }
-
   def load(userId: String, modelId: String): DataFrame = {
     require(exists(userId, modelId), s"store $userId/$modelId does not exist")
-    val p = dataPath(userId, modelId)
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("vector", ArrayType(FloatType), nullable = true),
-        StructField("meta", MapType(StringType, StringType), nullable = true))))
-    if (epochMode(userId, modelId)) {
-      // read ONLY committed epoch slices — an un-committed (crashed) append
-      // is structurally invisible
-      val dirs = storeLog(userId, modelId).layoutPaths(p)
-        .filter(d => fs.exists(new Path(d)))
-      if (dirs.isEmpty) empty
-      else epochSlicesDf(userId, modelId, p, dirs)
-    } else if (fs.exists(new Path(p))) {
-      val key = (userId, modelId, false)
-      readSchemaCache.synchronized(readSchemaCache.get(key)) match {
-        case Some(s) => spark.read.schema(s).parquet(p)
-        case None =>
-          val first = spark.read.parquet(p)
-          readSchemaCache.synchronized(readSchemaCache(key) = first.schema)
-          first
-      }
-    } else empty
+    val dirs = storeLog(userId, modelId).layoutPaths(dataPath(userId, modelId))
+    if (dirs.isEmpty) requireEpochLayout(userId, modelId)
+    graft.operators.EpochStore.read(spark, dataLayout(userId, modelId), dirs)
   }
 
-  /** The store's committed epoch history (epoch-mode stores only): the
-    * pinnable snapshot ids for [[loadAt]], oldest first. Epochs below the
-    * newest replace/compaction have been pruned and are not listed.
+  /** The store's committed epoch history: the pinnable snapshot ids for
+    * [[loadAt]], oldest first. Epochs below the newest replace/compaction
+    * have been pruned and are not listed.
     */
   def epochs(userId: String, modelId: String): Seq[Long] = {
     require(exists(userId, modelId), s"store $userId/$modelId does not exist")
-    require(epochMode(userId, modelId),
-      s"store $userId/$modelId predates the epoch layout — no snapshot history")
-    storeLog(userId, modelId).committedEpochs()
+    val committed = storeLog(userId, modelId).committedEpochs()
+    if (committed.isEmpty) requireEpochLayout(userId, modelId)
+    committed
   }
 
   /** The loud pin-validity gate shared by [[loadAt]] and the pinned
@@ -516,10 +472,8 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     */
   def loadAt(userId: String, modelId: String, epoch: Long): DataFrame = {
     requirePin(userId, modelId, epoch)
-    val p = dataPath(userId, modelId)
-    val dirs = storeLog(userId, modelId).layoutPathsAt(p, epoch)
-      .filter(d => fs.exists(new Path(d)))
-    epochSlicesDf(userId, modelId, p, dirs)
+    graft.operators.EpochStore.read(spark, dataLayout(userId, modelId),
+      storeLog(userId, modelId).layoutPathsAt(dataPath(userId, modelId), epoch))
   }
 
   /** Epoch retention — completes the time-travel lifecycle that [[loadAt]]
@@ -549,79 +503,28 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       targetFileBytes: Long = 128L << 20): (Int, Long) = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     require(exists(userId, modelId), s"store $userId/$modelId does not exist")
-    require(epochMode(userId, modelId),
-      s"store $userId/$modelId predates the epoch layout — nothing to vacuum")
-    val log = storeLog(userId, modelId)
-    // sweep crash-orphaned epoch directories (a prior run dying between
-    // its commit and the prune loop) on BOTH layouts the shared log
-    // governs — invisible to readers, reclaimed here; one log read
-    // serves both sweeps (the multi-layout form)
-    log.sweepOrphanDirs(Seq(dataPath(userId, modelId),
-      s"${indexPath(userId, modelId)}/data"))
-    val fold = log.activeFold()
-    // logical pin order: a previous vacuum's fold slice is the OLDEST
-    // content despite its high epoch number — it never counts as a "kept
-    // recent pin" and always re-folds
-    val pins = log.committedEpochs().filterNot(e => fold.exists(_._1 == e))
-    if (pins.size <= keepLast) return (0, 0L)
-    val boundary = pins(pins.size - keepLast)
-    val foldSet = fold.map(_._1).toSeq ++ pins.filter(_ < boundary)
-    def bytesOf(e: Long): Long = {
-      val dirs = Seq(s"${dataPath(userId, modelId)}/epoch=$e",
-        s"${indexPath(userId, modelId)}/data/epoch=$e")
-      dirs.map(new Path(_)).filter(fs.exists)
-        .map(fs.getContentSummary(_).getLength).sum
+    // the re-stamp needs the newest pin BEFORE the fold commit
+    val prevLast = storeLog(userId, modelId).committedEpochs()
+      .lastOption.getOrElse(-1L)
+    // re-slice the data fold to the file-size target: the whole point is
+    // consolidating many tiny append slices into few well-sized files. The
+    // index side folds ITS OWN slices, never a re-assignment of the store
+    // fold: when the index was built AFTER some appends, its build slice
+    // already covers those epochs' rows (caught by CatalogOpsSpec's
+    // build-after-append sweep leg)
+    val store = epochStore(userId, modelId, targetFileBytes)
+    store.vacuum(keepLast) match {
+      case None => (0, 0L)
+      case Some(fold) =>
+        reStampMetaStats(userId, modelId, prevLast, fold.target)
+        // retention is the maintenance pass a LONG-LIVED ingest reaches
+        // (streams vacuum via autoVacuumKeepLast; they never call
+        // optimize), so the index-drift advisory must fire here too —
+        // warn-only: a rebuild mid-stream is the operator's call, not the
+        // fold's. Cost: one <= nLists aggregation over the folded layout.
+        warnIfDrift(userId, modelId, " after vacuum")
+        (fold.epochs.size, fold.bytes - store.sliceBytes(fold.target))
     }
-    val bytesBefore = foldSet.map(bytesOf).sum
-    val cfg = config(userId, modelId)
-    val hasIndex = hasIvf(userId, modelId, cfg)
-    val target = log.nextEpoch()
-    val p = dataPath(userId, modelId)
-    val dirs = foldSet.map(e => s"$p/epoch=$e").filter(d => fs.exists(new Path(d)))
-    // re-slice to the file-size target: the whole point is consolidating
-    // many tiny append slices into few well-sized files
-    val nFiles = math.max(1,
-      math.ceil(bytesBefore.toDouble / targetFileBytes).toInt)
-    val obs = org.apache.spark.sql.Observation()
-    val folded = epochSlicesDf(userId, modelId, p, dirs)
-      .observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("n"))
-      .repartition(nFiles)
-    folded.write.mode("overwrite").parquet(s"$p/epoch=$target")
-    if (hasIndex) {
-      // the index side folds ITS OWN slices (IvfIndex.vacuum's fold body),
-      // never a re-assignment of the store fold: when the index was built
-      // AFTER some appends, its build slice already covers those epochs'
-      // rows — appending the store fold would hold them TWICE and the ANN
-      // path would serve duplicates (caught by CatalogOpsSpec's
-      // build-after-append sweep leg). Index slices absent from the fold
-      // set (pre-build epochs) correctly fold to nothing here.
-      val idxDir = s"${indexPath(userId, modelId)}/data"
-      val idxDirs = foldSet.map(e => s"$idxDir/epoch=$e")
-        .filter(d => fs.exists(new Path(d)))
-      if (idxDirs.nonEmpty)
-        spark.read.option("basePath", idxDir).parquet(idxDirs: _*)
-          .drop("epoch")
-          .repartition(col("list_id"))
-          .write.mode("overwrite").partitionBy("list_id")
-          .parquet(s"$idxDir/epoch=$target")
-    }
-    val prevLast = log.committedEpochs().lastOption.getOrElse(-1L)
-    // stats() (r17) answers admin counts from THIS commit row forever: a
-    // lost observation must never commit 0 for a non-empty fold — fall
-    // back to counting the slice just written (one fold-sized scan, on
-    // the failure path only)
-    val foldRows = scala.util.Try(obs.get("n").asInstanceOf[Long])
-      .getOrElse(spark.read.parquet(s"$p/epoch=$target").count())
-    log.commitVacuum(target, boundary, foldRows)
-    pruneEpochDirs(userId, modelId, log, foldSet)
-    reStampMetaStats(userId, modelId, prevLast, target)
-    // retention is the maintenance pass a LONG-LIVED ingest reaches
-    // (streams vacuum via autoVacuumKeepLast; they never call optimize),
-    // so the index-drift advisory must fire here too — warn-only: a
-    // rebuild mid-stream is the operator's call, not the fold's. Cost:
-    // one <= nLists aggregation over the just-folded layout.
-    warnIfDrift(userId, modelId, " after vacuum")
-    (foldSet.size, bytesBefore - bytesOf(target))
   }
 
   private def indexPath(userId: String, modelId: String) =
@@ -640,7 +543,16 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     * from pre-rebuild appends would double-serve their rows alongside
     * the fresh build's full slice.
     */
-  def buildIndex(userId: String, modelId: String, nLists: Int = 64): Unit = {
+  def buildIndex(userId: String, modelId: String, nLists: Int = 64): Unit =
+    rebuildIndex(userId, modelId)((rows, cfg) => graft.ml.IvfIndex.build(
+      rows, "id", "vector", indexPath(userId, modelId), nLists = nLists,
+      metric = cfg.metric, log = Some(storeLog(userId, modelId))))
+
+  /** The retire-first rebuild both builds share: `build` runs over the
+    * committed rows once the old index is gone.
+    */
+  private def rebuildIndex(userId: String, modelId: String)(
+      build: (DataFrame, StoreConfig) => graft.ml.IvfIndex): Unit = {
     val cfgPath = configPath(userId, modelId)
     val (cfg, idBase) = readConfig(fs, cfgPath)
     // UNCONDITIONAL deletes (a no-op on absent paths): gating the data
@@ -650,12 +562,10 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     idxInvalidate(userId, modelId)
     fs.delete(new Path(s"${indexPath(userId, modelId)}/centroids"), true)
     fs.delete(new Path(s"${indexPath(userId, modelId)}/data"), true)
-    // epoch stores: the index data lands under the newest committed store
-    // epoch (it covers exactly the committed rows the build read); the
-    // index only becomes load-bearing when the config flips below
-    val built = graft.ml.IvfIndex.build(load(userId, modelId), "id", "vector",
-      indexPath(userId, modelId), nLists = nLists, metric = cfg.metric,
-      log = if (epochMode(userId, modelId)) Some(storeLog(userId, modelId)) else None)
+    // the index data lands under the newest committed store epoch (it
+    // covers exactly the committed rows the build read); the index only
+    // becomes load-bearing when the config flips below
+    val built = build(load(userId, modelId), cfg)
     writeConfig(cfgPath, cfg.copy(indexType = "ivf"), idBase)
     // seed the cache with the just-built instance: the first serving call
     // after a build would otherwise immediately re-read what build wrote
@@ -674,19 +584,13 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
   def buildIndexWithCentroids(
       userId: String, modelId: String,
       centroids: Array[Array[Double]]): Unit = {
-    val cfgPath = configPath(userId, modelId)
-    val (cfg, idBase) = readConfig(fs, cfgPath)
-    require(centroids.nonEmpty && centroids.forall(_.length == cfg.dimension),
-      s"centroids must be non-empty ${cfg.dimension}-dim vectors")
-    idxInvalidate(userId, modelId)
-    fs.delete(new Path(s"${indexPath(userId, modelId)}/centroids"), true)
-    fs.delete(new Path(s"${indexPath(userId, modelId)}/data"), true)
-    val built = graft.ml.IvfIndex.buildWithCentroids(load(userId, modelId),
-      "id", "vector",
-      indexPath(userId, modelId), centroids, metric = cfg.metric,
-      log = if (epochMode(userId, modelId)) Some(storeLog(userId, modelId)) else None)
-    writeConfig(cfgPath, cfg.copy(indexType = "ivf"), idBase)
-    idxCache.synchronized { idxCache((userId, modelId)) = built }
+    val dim = config(userId, modelId).dimension
+    require(centroids.nonEmpty && centroids.forall(_.length == dim),
+      s"centroids must be non-empty $dim-dim vectors")
+    rebuildIndex(userId, modelId)((rows, cfg) =>
+      graft.ml.IvfIndex.buildWithCentroids(rows, "id", "vector",
+        indexPath(userId, modelId), centroids, metric = cfg.metric,
+        log = Some(storeLog(userId, modelId))))
   }
 
   /** The store's index-drift verdict ([[graft.ml.IvfIndex.maintenance]]
@@ -890,23 +794,14 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     * the admin stats surface costs one KB-sized log read per store
     * instead of a full data scan per tenant — at many-tenant / 100 TB
     * scale the difference between an instant listing and a cluster-wide
-    * scan storm. Legacy flat-layout stores (no log) keep the honest
-    * count scan. q161 oracle-locks the numbers against generative
+    * scan storm. q161 oracle-locks the numbers against generative
     * counts; [[healthCheck]] remains the scan-based cross-check that
     * would surface a lying commit row.
     */
   def stats(): DataFrame = {
     import spark.implicits._
-    val stores = list()
-    if (stores.isEmpty)
-      return Seq.empty[(String, String, Long)].toDF("user_id", "model_id", "vector_count")
-    stores
-      .map { case (u, m) =>
-        val n =
-          if (epochMode(u, m)) storeLog(u, m).sizeStats()._2
-          else load(u, m).count()
-        (u, m, n)
-      }
+    list()
+      .map { case (u, m) => (u, m, storeLog(u, m).sizeStats()._2) }
       .toDF("user_id", "model_id", "vector_count")
   }
 
@@ -924,60 +819,25 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     val kept = load(userId, modelId)
       .observe(obs,
         org.apache.spark.sql.functions.count(
-          when(coalesce(predicate, lit(true)), lit(1))).as("matched"),
-        org.apache.spark.sql.functions.count(lit(1)).as("scanned"))
+          when(coalesce(predicate, lit(true)), lit(1))).as("matched"))
       .filter(!predicate)
-    if (!epochMode(userId, modelId)) {
-      val tmp = s"${storePath(userId, modelId)}/_data_rewrite"
-      kept.write.mode("overwrite").parquet(tmp)
-      val dst = new Path(dataPath(userId, modelId))
-      fs.delete(dst, true)
-      fs.rename(new Path(tmp), dst)
-      obs.get("matched").asInstanceOf[Long]
-    } else {
-      // epoch store: the kept set becomes a REPLACE epoch in the store
-      // layout AND (when an index exists) the index layout, flipped
-      // together by one commit — the index can no longer go stale against
-      // a delete. The kept lineage reads only committed slices, so the
-      // index write may re-run it safely; pin it anyway when an index
-      // exists so the scan happens once.
-      val cfg = config(userId, modelId)
-      val hasIndex = hasIvf(userId, modelId, cfg)
-      val log = storeLog(userId, modelId)
-      val epoch = log.nextEpoch()
-      val out = if (hasIndex) kept.localCheckpoint(true) else kept
-      out.write.mode("overwrite")
-        .parquet(s"${dataPath(userId, modelId)}/epoch=$epoch")
-      if (hasIndex) {
-        idxLoad(userId, modelId, cfg).appendEpoch(out, "id", "vector", epoch)
-      }
-      val matched = obs.get("matched").asInstanceOf[Long]
-      val keptRows = obs.get("scanned").asInstanceOf[Long] - matched
-      // the superseded epoch set AND the pre-replace last epoch must be
-      // captured BEFORE the replace commit: committing prunes the commit
-      // log itself, after which neither can be named
-      val dead = log.allEpochs()
-      val prevLast = log.committedEpochs().lastOption.getOrElse(-1L)
-      log.commit(epoch, "replace", keptRows)
-      pruneEpochDirs(userId, modelId, log, dead)
-      rearmMetaStatsFromSlice(userId, modelId, prevLast, epoch)
-      matched
-    }
+    // the kept set becomes a REPLACE epoch in the store layout AND (when
+    // an index exists) the index layout, flipped together by one commit —
+    // the index can no longer go stale against a delete. The kept lineage
+    // reads only committed slices, so the index write may re-run it
+    // safely; pin it anyway when an index exists so the scan happens once.
+    val cfg = config(userId, modelId)
+    val hasIndex = hasIvf(userId, modelId, cfg)
+    val out = if (hasIndex) kept.localCheckpoint(true) else kept
+    // the replace commit prunes the log: the pre-replace last epoch must
+    // be captured before it
+    val prevLast = storeLog(userId, modelId).committedEpochs()
+      .lastOption.getOrElse(-1L)
+    val (epoch, _) = epochStore(userId, modelId)
+      .replace(slicesOf(userId, modelId, cfg, hasIndex, out))
+    rearmMetaStatsFromSlice(userId, modelId, prevLast, epoch)
+    obs.get("matched").asInstanceOf[Long]
   }
-
-  /** Best-effort cleanup of epoch directories superseded by a replace
-    * commit (both layouts) — readers resolve committed epochs first, so a
-    * surviving dead directory is invisible, just wasted bytes. The epoch
-    * list must be snapshotted before the replace commit (which prunes the
-    * commit log the list would come from).
-    */
-  private def pruneEpochDirs(
-      userId: String, modelId: String, log: graft.operators.EpochLog,
-      epochs: Seq[Long]): Unit =
-    epochs.foreach { e =>
-      log.deleteDir(s"${dataPath(userId, modelId)}/epoch=$e")
-      log.deleteDir(s"${indexPath(userId, modelId)}/data/epoch=$e")
-    }
 
   /** Batch kNN against one store with the reference's serving caps
     * (api/routes/batch_v1.py:63-64: <=1000 queries, k <= 100). The reference
@@ -1277,12 +1137,10 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     * unfiltered (pair-predicate-only) adaptive batches: pure commit-log
     * arithmetic on epoch stores — live for the current state, [[EpochLog
     * .rowsOf]] over the pinned epoch set for time travel — so the plan
-    * decision costs no count job. Legacy flat stores return None and the
-    * impl's live count decides.
+    * decision costs no count job.
     */
   private def storeRowCountHint(
       userId: String, modelId: String, asOf: Option[Long]): Option[Long] = {
-    if (!epochMode(userId, modelId)) return None
     val log = storeLog(userId, modelId)
     Some(asOf.fold(log.sizeStats()._2)(e => log.rowsOf(log.epochsAt(e).toSet)))
   }
@@ -1498,53 +1356,27 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     val dst = new Path(dataPath(userId, modelId))
     if (!fs.exists(dst)) return (0, 0)
     def filesUnder(p: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      if (!fs.exists(p)) return Seq.empty
-      fs.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) filesUnder(s.getPath)
-        else if (s.getPath.getName.endsWith(".parquet")) Seq(s)
-        else Seq.empty
-      }
+      val it = fs.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
     }
-    if (!epochMode(userId, modelId)) {
-      def parquetFiles = fs.listStatus(dst).filter(_.getPath.getName.endsWith(".parquet"))
-      val before = parquetFiles
-      val totalBytes = before.map(_.getLen).sum
-      val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      val df = spark.read.parquet(dst.toString).repartition(nFiles)
-      val tmp = s"${storePath(userId, modelId)}/_compact"
-      df.write.mode("overwrite").parquet(tmp)
-      fs.delete(dst, true)
-      fs.rename(new Path(tmp), dst)
-      (before.length, parquetFiles.length)
-    } else {
-      // epoch store: compaction = rewrite the committed rows into ONE
-      // replace epoch (and re-slice the index alongside), flipped by a
-      // single commit — crash-atomic, and the commit log itself is pruned
-      // by EpochLog's replace handling
-      val before = filesUnder(dst).size
-      val totalBytes = filesUnder(dst).map(_.getLen).sum
-      val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      val cfg = config(userId, modelId)
-      val hasIndex = hasIvf(userId, modelId, cfg)
-      val log = storeLog(userId, modelId)
-      val epoch = log.nextEpoch()
-      val obs = org.apache.spark.sql.Observation()
-      val df = load(userId, modelId)
-        .observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        .repartition(nFiles)
-      val out = if (hasIndex) df.localCheckpoint(true) else df
-      out.write.mode("overwrite")
-        .parquet(s"${dataPath(userId, modelId)}/epoch=$epoch")
-      if (hasIndex) {
-        idxLoad(userId, modelId, cfg).appendEpoch(out, "id", "vector", epoch)
-      }
-      val dead = log.allEpochs()
-      val prevLast = log.committedEpochs().lastOption.getOrElse(-1L)
-      log.commit(epoch, "replace", obs.get("n").asInstanceOf[Long])
-      pruneEpochDirs(userId, modelId, log, dead)
-      reStampMetaStats(userId, modelId, prevLast, epoch)
-      (before, filesUnder(dst).size)
-    }
+    // compaction = rewrite the committed rows into ONE replace epoch (and
+    // re-slice the index alongside), flipped by a single commit —
+    // crash-atomic, and the commit log itself is pruned by EpochLog's
+    // replace handling
+    val before = filesUnder(dst)
+    val nFiles = math.max(1,
+      math.ceil(before.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
+    val cfg = config(userId, modelId)
+    val hasIndex = hasIvf(userId, modelId, cfg)
+    val df = load(userId, modelId).repartition(nFiles)
+    val out = if (hasIndex) df.localCheckpoint(true) else df
+    val prevLast = storeLog(userId, modelId).committedEpochs()
+      .lastOption.getOrElse(-1L)
+    val (epoch, _) = epochStore(userId, modelId)
+      .replace(slicesOf(userId, modelId, cfg, hasIndex, out))
+    reStampMetaStats(userId, modelId, prevLast, epoch)
+    (before.size, filesUnder(dst).size)
   }
 
   /** Storage-level health report (reference health_check shape:
@@ -1605,7 +1437,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     */
   def clear(userId: String, modelId: String): Unit = {
     idxInvalidate(userId, modelId)
-    readSchemaInvalidate(userId, modelId)
+    graft.operators.EpochStore.forgetSchemas(s"${storePath(userId, modelId)}/")
     statsMemoInvalidate(userId, modelId)
     fs.delete(new Path(dataPath(userId, modelId)), true)
     fs.delete(new Path(epochsPath(userId, modelId)), true)
@@ -1661,13 +1493,8 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       // the stats schema is one fixed shape for every store (the publish
       // writers are the only producers): infer it once per JVM instead of
       // paying a schema-inference job on every adaptive-serving read
-      val cached = VectorStoreCatalog.statsReadSchema
-      if (cached != null) Some(spark.read.schema(cached).parquet(dst.toString))
-      else {
-        val first = spark.read.parquet(dst.toString)
-        VectorStoreCatalog.statsReadSchema = first.schema
-        Some(first)
-      }
+      Some(graft.operators.EpochStore.cachedParquet(spark.read,
+        VectorStoreCatalog.StatsSchemaKey, Seq(dst.toString)))
     }
   }
 
@@ -1729,8 +1556,6 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     */
   def refreshMetaStats(userId: String, modelId: String): Long = {
     require(exists(userId, modelId), s"store $userId/$modelId does not exist")
-    require(epochMode(userId, modelId),
-      "meta stats are epoch-stamped; this store predates the epoch layout")
     val epoch = storeLog(userId, modelId).committedEpochs()
       .lastOption.getOrElse(-1L) // empty log: the stamp consumers expect
     // the stamp rides through the aggregation as the null-key group (see
@@ -1815,7 +1640,6 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       preds: Seq[org.apache.spark.sql.Column],
       memoKey: Option[(String, Seq[(String, Any)])] = None): Seq[Option[Long]] = {
     if (preds.isEmpty) return Seq.empty
-    if (!epochMode(userId, modelId)) return preds.map(_ => None)
     // -1 is the EMPTY log's epoch (nextEpoch's base): it can never equal
     // a committed epoch, so empty-store stats stamped -1 read as fresh
     // while stats stamped -1 on a store that has since committed read
@@ -1888,7 +1712,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       throw new IllegalStateException(
         s"store $userId/$modelId is non-empty; pass force=true (reference admin.py:74-112 semantics)")
     idxInvalidate(userId, modelId)
-    readSchemaInvalidate(userId, modelId)
+    graft.operators.EpochStore.forgetSchemas(s"${storePath(userId, modelId)}/")
     statsMemoInvalidate(userId, modelId)
     fs.delete(new Path(storePath(userId, modelId)), true)
   }
@@ -1901,9 +1725,15 @@ object VectorStoreCatalog {
   private[graft] lazy val slog =
     org.slf4j.LoggerFactory.getLogger("graft.VectorStoreCatalog")
 
-  /** Inferred-once schema of every published meta-stats table (one fixed
+  /** Schema-cache key of every published meta-stats table (one fixed
     * shape, one producer family) — see [[VectorStoreCatalog.metaStatsFrame]]. */
-  @volatile private var statsReadSchema: StructType = _
+  private val StatsSchemaKey = "graft.VectorStoreCatalog/meta_stats"
+
+  /** The store layout's columns (its empty read). */
+  private val StoreSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("vector", ArrayType(FloatType), nullable = true),
+    StructField("meta", MapType(StringType, StringType), nullable = true)))
 
   /** Reference serving caps (api/routes/batch_v1.py:63-64, service/models.py:53). */
   val MaxBatchQueries = 1000

@@ -215,8 +215,8 @@ class SemDedupIndexSpec extends AnyFunSuite with SparkSpec {
     // row never does — readers must not see the orphan rows
     val log = idx.ivf.log.get
     val orphanEpoch = log.nextEpoch()
-    idx.ivf.appendEpoch(
-      emb.filter($"id" >= 300 && $"id" < 400), "id", "vector", orphanEpoch)
+    idx.ivf.store.get.writeSlice(Seq(idx.ivf.assign(
+      emb.filter($"id" >= 300 && $"id" < 400), "id", "vector")), orphanEpoch)
     val probe = emb.filter($"id" === 350).select(
       ($"id" + 70000).as("id"), $"vector")
     val hits = SemDedupIndex.load(spark, p)

@@ -378,6 +378,11 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains("NULL query_id"))
   }
 
+  // Spark jobs of one vacuum / optimize call on the small IVF store below,
+  // as measured on the per-family lifecycle code this protocol replaced
+  private val VacuumJobBound = 8
+  private val OptimizeJobBound = 7
+
   test("ingest and delete are single-pass (job counts via SparkListener)") {
     val cat = newCatalog
     cat.create("u", "jc", StoreConfig(dimension = 4))
@@ -414,6 +419,24 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
         assert(cat.deleteVectors("u", "jc", col("id") % 2 === 0) > 0)
       }
       assert(delJobs <= 12, s"delete = one data pass + constant log reads, ran $delJobs jobs")
+      // maintenance on an IVF store: vacuum folds both layouts and optimize
+      // rewrites both, each with its drift advisory. The bounds are the
+      // counts measured before the layouts shared one lifecycle, so the
+      // shared protocol cannot add a job unnoticed
+      cat.create("u", "jm", StoreConfig(dimension = 4, indexType = "ivf"))
+      val rnd = new scala.util.Random(7)
+      def batch = Seq.fill(40)(Tuple1(Seq.fill(4)(rnd.nextFloat()))).toDF("vector")
+      (0 until 3).foreach(_ => cat.addVectors("u", "jm", batch))
+      cat.buildIndex("u", "jm", nLists = 2)
+      (0 until 2).foreach(_ => cat.addVectors("u", "jm", batch))
+      val vacJobs = jobsDuring {
+        assert(cat.vacuum("u", "jm", keepLast = 1)._1 == 4)
+      }
+      assert(vacJobs <= VacuumJobBound,
+        s"vacuum on an IVF store ran $vacJobs jobs (bound $VacuumJobBound)")
+      val optJobs = jobsDuring { cat.optimize("u", "jm") }
+      assert(optJobs <= OptimizeJobBound,
+        s"optimize on an IVF store ran $optJobs jobs (bound $OptimizeJobBound)")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -824,9 +847,9 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
     // clear() publishes EMPTY stats with the deletion (see the dedicated
     // clear re-arm spec for the post-clear append lifecycle)
     cat.clear("u", "st")
-    assert(cat.metaStatsCount("u", "st", "tag", "a").isEmpty,
-      "between clear and the first append the store is not epoch-mode — " +
-        "consumers live-count the empty store")
+    assert(cat.metaStatsCount("u", "st", "tag", "a").contains(0L),
+      "between clear and the first append the store's log is empty and " +
+        "its published empty stats read as a fresh true zero")
   }
 
   test("metaStatsCountTyped: the stored-encoding inverse serves typed " +

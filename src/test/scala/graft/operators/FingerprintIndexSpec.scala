@@ -141,7 +141,7 @@ class FingerprintIndexSpec extends AnyFunSuite with SparkSpec {
     val log = EpochLog(spark, p)
     val parked = new java.io.File(s"$p/docs/epoch=${log.nextEpoch()}")
     parked.mkdirs()
-    assert(log.sweepOrphanDirs(s"$p/docs").isEmpty)
+    assert(log.sweepOrphanDirs(Seq(s"$p/docs")).isEmpty)
     assert(parked.exists(), "nextEpoch slot must survive a sweep")
   }
 
@@ -399,8 +399,10 @@ class FingerprintIndexSpec extends AnyFunSuite with SparkSpec {
       s"compaction must prune dead commit rows, got ${logParts.toSeq}")
   }
 
-  test("a legacy parquet commit log (pre-JSONL format) stays readable, " +
-    "and new JSONL commits merge on top of it") {
+  test("a legacy parquet commit log fails loudly") {
+    // no persisted store uses the pre-JSONL parquet log any more: reading
+    // one fails loudly, naming the format and the remedy, instead of
+    // decoding it (or half of it, next to newer JSONL commits)
     val p = java.nio.file.Files.createTempDirectory("graft_fpidx_leg").toString
     // the exact on-disk shape the pre-r19 EpochLog wrote: coalesced
     // parquet with (epoch, action, n_rows) rows
@@ -408,20 +410,15 @@ class FingerprintIndexSpec extends AnyFunSuite with SparkSpec {
       .toDF("epoch", "action", "n_rows")
       .coalesce(1).write.mode("overwrite").parquet(s"$p/commits")
     val log = EpochLog(spark, p)
-    assert(log.committedEpochs() == Seq(0L, 1L),
-      "legacy parquet rows must decode, not throw 'corrupt commit-log line'")
-    assert(log.sizeStats() == ((2, 15L, 5L)))
-    // a new-format commit lands next to the legacy files and both decode
-    log.commit(2L, "add", 3L)
-    assert(log.committedEpochs() == Seq(0L, 1L, 2L))
-    assert(log.sizeStats() == ((3, 18L, 8L)))
-    // a replace prunes the legacy parquet files with the JSONL ones
-    log.commit(3L, "replace", 18L)
-    assert(log.committedEpochs() == Seq(3L))
-    val left = new java.io.File(s"$p/commits").listFiles()
-      .map(_.getName).filter(n => !n.startsWith("_") && !n.startsWith("."))
-    assert(left.forall(_.endsWith(".jsonl")),
-      s"replace must prune superseded legacy files too, got ${left.toSeq}")
+    def loud(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains("unsupported legacy parquet commit log") &&
+        e.getMessage.contains("rebuild"), e.getMessage)
+    }
+    loud(log.committedEpochs())
+    loud(log.sizeStats())
+    // a new commit cannot merge on top of it either
+    loud(log.commit(2L, "add", 3L))
   }
 
   test("commit filenames carry a monotonic sequence so decode order never " +

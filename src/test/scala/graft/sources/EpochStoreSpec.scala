@@ -120,7 +120,10 @@ class EpochStoreSpec extends AnyFunSuite with SparkSpec {
       s"expected only the replace epoch to survive, got $dataEpochs")
   }
 
-  test("pre-epoch (legacy flat) stores stay on the legacy path") {
+  test("pre-epoch (legacy flat) stores fail loudly") {
+    // no store uses the pre-epoch flat layout any more: a data/ directory
+    // holding flat parquet with an empty log fails loudly on read and on
+    // append, and is never silently converted
     val cat = newCatalog
     cat.create("u", "leg", StoreConfig(dimension = 4))
     // simulate a store written before the epoch layout existed: flat
@@ -129,10 +132,14 @@ class EpochStoreSpec extends AnyFunSuite with SparkSpec {
     vecs(40).select(monotonically_increasing_id().as("id"), $"vector",
         typedLit(Map.empty[String, String]).as("meta"))
       .write.mode("overwrite").parquet(s"$root/data")
-    assert(cat.count("u", "leg") == 40)
-    // appends keep the flat layout — no epoch slices appear mid-store
-    assert(cat.addVectors("u", "leg", vecs(10, seed = 5)) == 10L)
-    assert(cat.count("u", "leg") == 50)
+    def loud(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains("unsupported pre-epoch store") &&
+        e.getMessage.contains("rebuild"), e.getMessage)
+    }
+    loud(cat.count("u", "leg"))
+    loud(cat.epochs("u", "leg"))
+    loud(cat.addVectors("u", "leg", vecs(10, seed = 5)))
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_epochs")),
