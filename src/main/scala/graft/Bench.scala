@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main. Runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"sf":...}
@@ -14,17 +12,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(LocalSession.cpusFromEnv(32))
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.windows.muteNoPartitionWarning() // all global windows here are bounded
 
     // one warm-up pass of the flagship to absorb JVM/codegen warm-up
     try SparkEntry.queries("q11_knn_cosine")(spark, sfDir)

@@ -827,8 +827,8 @@ object SparkEntry {
     // Corpus-global heavy hitters (Misra-Gries two-pass, EXACT): every
     // token bigram above 0.12% of the stream. The sketch pass exchanges
     // partitions x k counters instead of one row per distinct bigram —
-    // the universe that grows with the corpus (tools/HeavyProbe measures
-    // the trade at a 2M-distinct universe). The oracle replays the naive
+    // the universe that grows with the corpus (measured by HeavyProbe at
+    // commit 19fff4c at a 2M-distinct universe). The oracle replays the naive
     // GROUP BY ... HAVING twin: same rows, corpus-sized shuffle.
     "q137_heavy_hitters" -> ((s, dir) => {
       val grams = t(s, dir, "documents")
@@ -3051,9 +3051,8 @@ object SparkEntry {
     // geometry): q134's generative clip structure split corpus/batch, so
     // the oracle locks that the index path reproduces the recompute
     // path's pair arithmetic — corpus WAV bytes are decoded once at
-    // build, never re-read at match (the VideoProbe economics, audio
-    // edition). Batch clip 100+x copies corpus clip x exactly (j = 1)
-    // and overlaps x±1 (j = 0.5) and x±2 (j = 0.2).
+    // build, never re-read at match. Batch clip 100+x copies corpus clip x
+    // exactly (j = 1) and overlaps x±1 (j = 0.5) and x±2 (j = 0.2).
     "q147_audio_index" -> ((s, dir) => {
       import s.implicits._
       val win = 1000 // 125 ms at 8000 Hz
@@ -4509,8 +4508,7 @@ object SparkEntry {
     // discipline with a 50% breakdown point. The operator runs the
     // histogram shape (r13: both medians off cumulative windows over
     // DISTINCT (key, metric) rows, data rows shuffle once for the final
-    // scalar join — RobustZProbe: 137.7 vs 219.9 MB shuffled at 20M
-    // rows); the oracle is the plain quantile_cont form — identical
+    // scalar join); the oracle is the plain quantile_cont form — identical
     // doubles because type-7 medians of integer metrics and their
     // |deviations| are exact dyadic values. Zero-MAD keys NULL in both
     // engines.

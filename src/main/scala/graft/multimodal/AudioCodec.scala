@@ -22,7 +22,6 @@ object AudioCodec {
   case class RawAudio(sampleRate: Int, channels: Int, samples: Array[Double]) {
     require(sampleRate > 0, s"bad sample rate $sampleRate")
     require(channels > 0, s"bad channel count $channels")
-    def durationSeconds: Double = samples.length.toDouble / sampleRate
   }
 
   private def isWav(b: Array[Byte]) =

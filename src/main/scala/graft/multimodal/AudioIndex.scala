@@ -12,7 +12,7 @@ import Multimodal.MediaRow
   * machinery, made durable). Audio bytes are RIFF-parsed, PCM-decoded,
   * windowed, and content-hashed ONCE at append time; every later match
   * touches only (id, fp) longs and per-clip set sizes — never the WAV
-  * containers (the `VideoProbe` economics, audio edition: a clip's
+  * containers (the [[VideoIndex]] economics, audio edition: a clip's
   * persisted footprint is ~8 bytes per window vs its full PCM payload).
   *
   * All lifecycle and match machinery lives in [[MediaSetIndex]] (fps +

@@ -64,9 +64,10 @@ object AudioLandmarkIndex {
     require(minShared >= 0, s"minShared must be >= 0, got $minShared")
     // the MEASURED small-set trap, loud at build time: short clips carry
     // landmark sets of a handful of events, and a handful crosses a low
-    // Jaccard ratio on one or two chance-shared hashes (IndexSweepProbe:
-    // 675 false hits per 5000 probes on 8-frame two-tone clips at the 0.3
-    // default). Either raise minJaccard or set the absolute minShared
+    // Jaccard ratio on one or two chance-shared hashes (measured by
+    // IndexSweepProbe at commit 19fff4c: 675 false hits per 5000 probes on
+    // 8-frame two-tone clips at the 0.3 default). Either raise minJaccard or
+    // set the absolute minShared
     // floor (a true near-dup shares most of its set; chance pairs share
     // one or two) — the probe's guarded leg shows false hits collapse
     // while tempo-twin recall holds.

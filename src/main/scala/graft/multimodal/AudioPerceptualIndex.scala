@@ -14,8 +14,8 @@ import Multimodal.MediaRow
   * bands survive resampling), shingled into 64-bit set elements.
   * A gain-shifted or resampled duplicate — the COMMON duplicate in a
   * scraped audio corpus — matches through this index where the exact
-  * window hash measures ~0 overlap (`AudioProbe`'s perceptual leg holds
-  * both numbers side by side).
+  * window hash measures ~0 overlap (both measured side by side by
+  * `AudioProbe` at commit 19fff4c).
   *
   * All lifecycle and match machinery lives in [[MediaSetIndex]] (fps +
   * sizes layouts, epoch commits, dedupBatch / ingestBatch, compaction,

@@ -11,8 +11,9 @@ import Multimodal.MediaRow
   * by set Jaccard. Media bytes are decoded and fingerprinted ONCE at
   * append time; every later match touches only (id, fp) longs and
   * per-media set sizes — the reason the family exists (re-decoding a
-  * 100 TB media corpus per match is the naive alternative; `VideoProbe`
-  * measures the gap at 307× per match for the video instance).
+  * 100 TB media corpus per match is the naive alternative; measured by
+  * `VideoProbe` at commit 19fff4c, the gap is 307× per match for the video
+  * instance).
   *
   * Layout, shared by every instance:
   *  - `{path}/fps/epoch=N`   — (id, h BIGINT): the media row's DISTINCT
@@ -40,8 +41,8 @@ abstract class MediaSetIndex extends EpochIndex {
 
   /** SET-SIZE-AWARE intersection floor on matches — the guard a ratio
     * threshold cannot provide: two SMALL fingerprint sets cross a Jaccard
-    * bar on two or three chance-shared hashes (IndexSweepProbe measured
-    * the regime on 8-frame clips at the landmark family's 0.3 default:
+    * bar on two or three chance-shared hashes (measured by IndexSweepProbe
+    * at commit 19fff4c on 8-frame clips at the landmark family's 0.3 default:
     * the false pairs share 2-3 of sets sized 5-6), while a TRUE near-dup
     * shares most of its set whatever its size. A pair matches iff
     * jaccard >= [[minJaccard]] AND shared >= min(minShared, |A|, |B|):

@@ -10,7 +10,7 @@ import Multimodal.MediaRow
   * made durable; the [[graft.operators.WinnowIndex]] of the multimodal
   * surface). Video bytes are demuxed and fingerprinted ONCE at append
   * time; every later match touches only (id, fp) longs and per-video set
-  * sizes (`VideoProbe`: 307× slimmer per match than container re-reads).
+  * sizes.
   *
   * All lifecycle and match machinery lives in [[MediaSetIndex]] (fps +
   * sizes layouts, epoch commits, dedupBatch / ingestBatch, compaction);

@@ -640,7 +640,7 @@ object Curation {
     * shuffle — a hot key (one domain = half the crawl) costs its scan but
     * never funnels its full row set through one task, the failure mode a
     * `row_number() OVER (PARTITION BY key)` formulation hits at 100 TB
-    * (same argument, measured, as tools/VocabProbe for q90).
+    * (the argument measured for q90 by VocabProbe at commit 19fff4c).
     */
   def capPerKey(
       df: DataFrame,

@@ -44,7 +44,6 @@ case class EditIndex(
     maxEdits: Int,
     blockCol: Option[String] = None) extends EpochIndex {
 
-  def titlesPath: String = layoutDir("titles")
   override protected def layoutNames: Seq[String] = Seq("titles")
 
   // a pre-blockCol index holds 2-column (id, title) epochs; appends after

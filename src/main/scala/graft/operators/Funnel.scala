@@ -130,7 +130,7 @@ object Funnel {
     *
     * Scale shape — the hot-key lever is `bucketMs`: a naive
     * `lead() OVER (PARTITION BY user ORDER BY ts)` sorts a bot user's
-    * ENTIRE history in one task (the [[topPaths]]/FunnelProbe trap).
+    * ENTIRE history in one task (the [[topPaths]] trap).
     * Here the window partitions by (user, floorDiv(ts, bucketMs)) — one
     * task's sort is bounded by events-per-user-per-bucket, not
     * events-per-user — and the cross-bucket links are stitched from

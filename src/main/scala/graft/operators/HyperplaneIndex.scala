@@ -54,18 +54,18 @@ case class HyperplaneIndex(
   require(nBits <= 64 || 64 % (nBits / nBands) == 0,
     s"multi-word signatures need band width dividing 64, got ${nBits / nBands}")
 
-  def vecsPath: String = layoutDir("vecs")
   def bandsPath: String = layoutDir("bands")
   override protected def layoutNames: Seq[String] = Seq("vecs", "bands")
 
   /** Signatures wider than 64 bits span ceil(nBits/64) longs (`sig0..`) —
     * the bucket-selectivity lever at corpus scale: bucket count per band is
     * 2^(nBits/nBands), so the default 64/8 geometry (256 buckets) is
-    * candidate-bound once the corpus passes ~100k rows (IndexSweepProbe
-    * measures it), while 128/8 (65k buckets) or 256/8 (16M) keep the
-    * candidate verify output-bound. Recall per band falls as width grows
-    * (p^width for per-bit agreement p) — raise nBands alongside nBits to
-    * buy selectivity without recall loss, at linear banding-row cost.
+    * candidate-bound once the corpus passes ~100k rows (measured by
+    * IndexSweepProbe at commit 19fff4c), while 128/8 (65k buckets) or
+    * 256/8 (16M) keep the candidate verify output-bound. Recall per band
+    * falls as width grows (p^width for per-bit agreement p) — raise nBands
+    * alongside nBits to buy selectivity without recall loss, at linear
+    * banding-row cost.
     */
   private val nWords = (nBits + 63) / 64
   private val sigNames: Seq[String] = (0 until nWords).map(w => s"sig$w")
@@ -314,9 +314,10 @@ case class HyperplaneIndex(
 
 object HyperplaneIndex {
 
-  /** The geometry sizing rule, measured by `IndexSweepProbe`: per-band
-    * bucket space must dwarf the corpus or the banding join drowns in
-    * INCIDENTAL candidates (unrelated vectors sharing one band's bits) —
+  /** The geometry sizing rule, measured by `IndexSweepProbe` at commit
+    * 19fff4c: per-band bucket space must dwarf the corpus or the banding join
+    * drowns in INCIDENTAL candidates (unrelated vectors sharing one band's
+    * bits) —
     * at 10M rows the 128/8 geometry (16-bit buckets, ~150 rows each)
     * yields millions of candidate pairs and the verify join degenerates to
     * a full-layout join, while 256/8 (32-bit buckets) keeps candidates

@@ -34,7 +34,6 @@ case class SegmentIndex(
     delimiter: String,
     minSegmentLen: Int) extends EpochIndex {
 
-  def segsPath: String = layoutDir("segs")
   override protected def layoutNames: Seq[String] = Seq("segs")
 
   def storedSegs(): DataFrame = storedLayout("segs")

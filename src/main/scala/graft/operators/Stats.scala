@@ -200,8 +200,8 @@ object Stats {
     * and aggregation state are bounded by the key's value DOMAIN, not its
     * row count — same bounded-cardinality caveat as the exact-percentile
     * family (lengths, counts, quantized scores; swap to approx upstream
-    * for unbounded continuous metrics). RobustZProbe measures the two
-    * shapes at 20M rows.
+    * for unbounded continuous metrics). Measured by RobustZProbe at commit
+    * 19fff4c at 20M rows: 137.7 vs 219.9 MB shuffled for the two shapes.
     */
   def robustZScores(
       df: DataFrame,

@@ -1541,9 +1541,9 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
 
   /** Persist per-(key, value) metadata cardinalities for the CURRENT
     * committed epoch — the selectivity statistics [[queryAdaptive]]
-    * consults instead of running its per-query count job (FilterProbe
-    * measures that job as the broad-path overhead). One aggregation over
-    * the store's meta column; rows without meta are absent by
+    * consults instead of running its per-query count job (measured by
+    * FilterProbe at commit 19fff4c as the broad-path overhead). One
+    * aggregation over the store's meta column; rows without meta are absent by
     * construction (a filter cannot match them). Stats are epoch-stamped:
     * a commit nothing maintained makes them stale and every consumer
     * falls back to the live count automatically — but every commit

@@ -685,7 +685,7 @@ object Streams {
     * to `onBatch` BEFORE the append (the shared sink-before-append
     * at-least-once contract). Blocking is INDEX state (r13): when the
     * index was built with a `blockCol`, every micro-batch frame must
-    * carry that column — the feed-scale recall lever EditProbe measures.
+    * carry that column — the feed-scale recall lever.
     */
   def ingestEditStream(
       docs: DataFrame,
@@ -760,10 +760,11 @@ object Streams {
     * ([[graft.text.NgramLm.KnFrames]]) — the gate for a reference corpus
     * whose pruned bigram table outgrows the broadcast ceiling
     * ([[graft.text.NgramLm.trainKn]] refuses past `maxBigrams`;
-    * `LmProbe` measured the broadcast scorer 12.3× slower already at
-    * ~2.2M pruned rows). Same gate decisions byte for byte — q178 pins
-    * that the frames scorer reproduces the kernel's perplexities, and
-    * q182 pins the WHOLE gate against q145's oracle — reached through
+    * measured by `LmProbe` at commit 19fff4c: the broadcast scorer is
+    * 12.3× slower already at ~2.2M pruned rows). Same gate decisions byte for
+    * byte — q178 pins that the frames scorer reproduces the kernel's
+    * perplexities, and q182 pins the WHOLE gate against q145's oracle —
+    * reached through
     * three LEFT equi-joins per micro-batch instead of a broadcast map
     * probe. The frames' persisted blocks are the CALLER's lifetime to
     * manage (train before start, `frames.unpersist()` after the stream
@@ -949,47 +950,6 @@ object Streams {
         .select(col(idCol),
           round(col("ppl") * 10000).cast("long").as("ppl_x1e4"))
       gated.join(ppl, Seq(idCol))
-    }
-
-  /** Stream form of [[qualityGateKn3ModFrames]] — stateless per-batch
-    * chop like every gate stream; frames lifetime is the caller's.
-    */
-  def qualityGateStreamKn3ModFrames(
-      docs: DataFrame,
-      rates: Map[String, Double],
-      frames: graft.text.NgramLm.Kn3ModFrames,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      langCol: String = "lang",
-      minEntropyX1e4: Long = 28000L,
-      maxPplX1e4: Long = 330000L,
-      checkpoint: Option[String] = None,
-      onBatch: (DataFrame, Long) => Unit = (_, _) => (),
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    gateStream(docs, checkpoint, trigger, onBatch) { batch =>
-      qualityGateKn3ModFrames(batch, rates, frames, idCol, textCol, langCol,
-        minEntropyX1e4, maxPplX1e4)
-    }
-
-  /** [[qualityGateStream]] at trigram order — the stream form of
-    * [[qualityGateKn3]], stateless like every gate stream (pure per-row
-    * map per micro-batch; chopping invisible).
-    */
-  def qualityGateStreamKn3(
-      docs: DataFrame,
-      rates: Map[String, Double],
-      model: graft.text.NgramLm.Kn3Model,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      langCol: String = "lang",
-      minEntropyX1e4: Long = 28000L,
-      maxPplX1e4: Long = 640000L,
-      checkpoint: Option[String] = None,
-      onBatch: (DataFrame, Long) => Unit = (_, _) => (),
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    gateStream(docs, checkpoint, trigger, onBatch) { batch =>
-      qualityGateKn3(batch, rates, model, idCol, textCol, langCol,
-        minEntropyX1e4, maxPplX1e4)
     }
 
   /** [[qualityGateStreamFrames]] at trigram order — the no-ceiling gate

@@ -26,9 +26,9 @@ import org.apache.spark.sql.graftx.Bridge
   * [[scoreKn3Distributed]]/[[scoreKn3ModDistributed]]) keeps every gram
   * table distributed and scores through equi-joins — same arithmetic,
   * no driver table, no cap (q168/q171 pin route identity under the
-  * broadcast twins' oracles). Route choice, measured (LmProbe): the
-  * broadcast map probe wins only while the model is SMALL (sf0.1 bench:
-  * 0.59 s vs 1.03 s); by ~1M pruned rows the join route already trains
+  * broadcast twins' oracles). Route choice, measured by LmProbe at commit
+  * 19fff4c: the broadcast map probe wins only while the model is SMALL (sf0.1
+  * bench: 0.59 s vs 1.03 s); by ~1M pruned rows the join route already trains
   * 1.8× and scores 2.2× faster — prefer frames for table-shaped models
   * well before the ceiling forces it.
   */

@@ -3,7 +3,6 @@ package graft.tools
 import graft.functions.vector
 import graft.operators.Knn
 import graft.sources.{StoreConfig, VectorStoreCatalog}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end demo of the public library surface, mirroring the reference's
@@ -15,15 +14,8 @@ import org.apache.spark.sql.functions._
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(4)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.windows.muteNoPartitionWarning() // all global windows here are bounded
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_demo_stores").toString

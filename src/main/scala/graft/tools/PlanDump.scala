@@ -1,22 +1,14 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dump physical plans of representative queries for scale review.
-  * Session shape matches Bench (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions=cpus, AQE on, data from $SPARK_GRAFT_SF_DIR) so the
-  * dumped plan is the one the driver's bench executes.
+  * Session shape is Bench's ([[graft.LocalSession]] at
+  * $SPARK_GRAFT_CPUS, data from $SPARK_GRAFT_SF_DIR) so the dumped plan is
+  * the one the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.sql.legacy.parquet.nanosAsLong","true")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = graft.LocalSession(graft.LocalSession.cpusFromEnv(32))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.windows.muteNoPartitionWarning()
     for (name <- args) {
       println(s"========== $name ==========")
       println(graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(

@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** Per-job profiler for a single declared query (optimization-round tooling).
   *
   * Runs one named SparkEntry query with the SAME session shape as Bench
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus, AQE on), once as a
+  * ([[graft.LocalSession]] at $SPARK_GRAFT_CPUS), once as a
   * discarded warm-up and once measured, and prints every Spark job the
   * measured run submitted: duration, stage count, task count, shuffle
   * read/write bytes, and the first line of the job's call site. The job
@@ -21,17 +20,8 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QueryProfile <queryName> [queryName ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(graft.LocalSession.cpusFromEnv(32))
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.windows.muteNoPartitionWarning()
 
     case class JobRow(id: Int, var site: String = "", var t0: Long = 0L,
       var t1: Long = 0L, var nStages: Int = 0, var nTasks: Int = 0,

@@ -2,21 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM. */
+/** One shared local session for the whole test JVM, in the same shape as
+  * Bench and Verify ([[LocalSession]]) at a fixed 4 cores.
+  */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-    graft.functions.windows.muteNoPartitionWarning() // bounded global ranks only
-    s
-  }
+  val Cpus = 4
+
+  lazy val spark: SparkSession = LocalSession(Cpus)
 }
 
 trait SparkSpec {
