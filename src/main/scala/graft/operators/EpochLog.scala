@@ -234,6 +234,13 @@ private[graft] case class EpochLog(spark: SparkSession, path: String) {
     (live, active.map(a => (a.epoch, a.nRows)))
   }
 
+  /** The newest commit file's name (sequence + UUID); None for an empty
+    * log. Every commit, replace, vacuum and reset lands a new one, so it
+    * keys caches of anything derived from the committed state. One listing.
+    */
+  def head(): Option[String] =
+    listLogFiles().map(_.getName).maxByOption(n => (seqOf(n), n))
+
   /** Live epochs: everything at or above the newest replace epoch, minus
     * epochs expired by a vacuum fold (the fold slice itself stays live).
     */

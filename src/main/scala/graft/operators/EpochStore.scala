@@ -38,16 +38,21 @@ private[graft] final case class EpochStore(
     (epoch, n)
   }
 
-  /** Write `frames` — one per leading layout; trailing layouts without a
-    * frame get no slice at this epoch (a catalog store before its index
-    * is built) — under `epoch`, concurrently, overwriting any orphan a
-    * failed attempt left there. Returns the first frame's row count,
-    * observed inside its write. A zero-row bucketed write can be
-    * AQE-propagated away before the metric fires; 0 is then its count.
+  /** Write `frames` — one per layout of `to`, matched by position —
+    * under `epoch`, concurrently, overwriting any orphan a failed attempt
+    * left there. A layout outside `to` gets no slice at this epoch (a
+    * catalog store without an index, or with unarmed statistics), and any
+    * orphan of a failed attempt there is removed. Returns the first
+    * frame's row count, observed inside its write. A zero-row bucketed
+    * write can be AQE-propagated away before the metric fires; 0 is then
+    * its count.
     */
-  def writeSlice(frames: Seq[DataFrame], epoch: Long): Long = {
+  def writeSlice(frames: Seq[DataFrame], epoch: Long,
+      to: Seq[Layout] = layouts): Long = {
     val obs = Observation()
-    EpochIndex.awaitAll(layouts.zip(frames).zipWithIndex.map {
+    layouts.filterNot(l => to.exists(_.dir == l.dir))
+      .foreach(l => log.deleteDir(l.slice(epoch)))
+    EpochIndex.awaitAll(to.zip(frames).zipWithIndex.map {
       case ((l, df), i) => () =>
         l.write(if (i == 0) df.observe(obs, count(lit(1)).as("n")) else df,
           l.slice(epoch))
@@ -55,17 +60,17 @@ private[graft] final case class EpochStore(
     scala.util.Try(obs.get("n").asInstanceOf[Long]).getOrElse(0L)
   }
 
-  /** Replace the whole content by `frames` ([[writeSlice]]) under one
-    * "replace" row — the atomic cutover of compaction and delete. `units`
-    * maps the observed row count to the commit-unit count (families that
-    * log documents, not rows). Every epoch the log knows is superseded;
-    * that set is snapshotted before the commit, which prunes the log it
-    * would be read from. Returns (epoch, committed count).
+  /** Replace the whole content by `frames` ([[writeSlice]] to `to`) under
+    * one "replace" row — the atomic cutover of compaction and delete.
+    * `units` maps the observed row count to the commit-unit count
+    * (families that log documents, not rows). Every epoch the log knows is
+    * superseded; that set is snapshotted before the commit, which prunes
+    * the log it would be read from. Returns (epoch, committed count).
     */
-  def replace(frames: Seq[DataFrame], units: Long => Long = identity)
-      : (Long, Long) = {
+  def replace(frames: Seq[DataFrame], units: Long => Long = identity,
+      to: Seq[Layout] = layouts): (Long, Long) = {
     val epoch = log.nextEpoch()
-    val n = units(writeSlice(frames, epoch))
+    val n = units(writeSlice(frames, epoch, to))
     val superseded = log.allEpochs()
     log.commit(epoch, "replace", n)
     prune(superseded)
@@ -75,7 +80,9 @@ private[graft] final case class EpochStore(
   /** Fold every committed epoch below the newest `keepLast` pins into one
     * slice per layout ([[EpochLog.vacuumPlan]]) and expire the originals.
     * Orphan directories of a prior crash are swept first. A layout with no
-    * slice at any folded epoch folds to nothing. The fold row carries the
+    * slice at any folded epoch folds to nothing, and so does a `complete`
+    * layout missing a slice at any of them; a layout that folds to
+    * nothing has any orphan at the fold epoch removed. The fold row carries the
     * folded epochs' commit counts ([[EpochLog.rowsOf]]) — never a scan.
     * None when history is already within `keepLast`.
     */
@@ -87,8 +94,9 @@ private[graft] final case class EpochStore(
     val bytes = folded.map(sliceBytes).sum
     EpochIndex.awaitAll(layouts.map { l => () =>
       val dirs = existing(log.spark, l, folded.map(l.slice))
-      if (dirs.nonEmpty)
+      if (dirs.nonEmpty && (!l.complete || dirs.size == folded.size))
         l.write(l.foldShape(read(log.spark, l, dirs), bytes), l.slice(target))
+      else log.deleteDir(l.slice(target))
     }: _*)
     log.commitVacuum(target, boundary, units)
     prune(folded)
@@ -136,13 +144,17 @@ private[graft] object EpochStore {
     * its schema from the exact file set read). A layout that may lack a
     * slice at a committed epoch (an index built after the store's first
     * appends) declares `emptySchema`: its reads skip absent slices and
-    * read as that empty frame when none remain.
+    * read as that empty frame when none remain. A `complete` layout is
+    * meaningful only with a slice at every committed epoch (the catalog's
+    * meta statistics): a vacuum folds it only when every folded epoch has
+    * one, so a fold never makes an incomplete slice set look complete.
     */
   final case class Layout(
       dir: String,
       kind: Kind = Plain(),
       readOptions: Map[String, String] = Map.empty,
-      emptySchema: Option[StructType] = None) {
+      emptySchema: Option[StructType] = None,
+      complete: Boolean = false) {
 
     def slice(epoch: Long): String = s"$dir/epoch=$epoch"
 

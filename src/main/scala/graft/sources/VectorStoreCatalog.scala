@@ -61,7 +61,8 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
   // `_epochs/` that ALSO governs the IVF index's `_ivf/data/epoch=N`
   // slices: a store append and its index append become visible through a
   // single commit row (all-or-nothing), so a crash between the two writes
-  // can no longer leave store and index permanently out of sync. Both
+  // can no longer leave store and index permanently out of sync. The meta
+  // statistics' `meta_stats/epoch=N` slices ride the same rows. All three
   // layouts commit through one [[graft.operators.EpochStore]]; a missing
   // `_epochs/` reads as an empty log.
   private def epochsPath(userId: String, modelId: String) =
@@ -73,22 +74,40 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     graft.operators.EpochStore.Layout(dataPath(userId, modelId),
       graft.operators.EpochStore.Plain(targetFileBytes),
       emptySchema = Some(StoreSchema))
-  /** The store's lifecycle: the data layout, then the IVF layout (which
-    * gets a slice only while an index exists). `targetFileBytes` sizes the
-    * data layout's vacuum fold.
+  /** The meta statistics: per epoch, the (key, value, n) counts of that
+    * epoch's data slice. Counts sum over the committed slices, so a pair in
+    * several slices adds up and a vacuum fold is a plain union.
+    */
+  private def statsLayout(userId: String, modelId: String) =
+    graft.operators.EpochStore.Layout(metaStatsPath(userId, modelId),
+      complete = true)
+  /** The store's lifecycle: the data layout, the IVF layout (a slice only
+    * while an index exists) and the statistics layout (a slice only while
+    * armed, [[statsArmed]]). `targetFileBytes` sizes the data layout's
+    * vacuum fold.
     */
   private def epochStore(userId: String, modelId: String,
       targetFileBytes: Long = 0L): graft.operators.EpochStore =
     graft.operators.EpochStore(storeLog(userId, modelId), Seq(
       dataLayout(userId, modelId, targetFileBytes),
-      graft.ml.IvfIndex.dataLayout(indexPath(userId, modelId))))
-  /** The slices of one commit: the store rows, plus their IVF assignment
-    * when an index exists.
+      graft.ml.IvfIndex.dataLayout(indexPath(userId, modelId)),
+      statsLayout(userId, modelId)))
+  /** The slices of one commit, by layout: the store rows, their IVF
+    * assignment when an index exists, and their counts when the statistics
+    * are armed. When more than one layout reads the rows they are pinned
+    * once, so the counts come from the rows the commit writes, never from
+    * a second run of the caller's lineage.
     */
-  private def slicesOf(userId: String, modelId: String, cfg: StoreConfig,
-      hasIndex: Boolean, rows: DataFrame): Seq[DataFrame] =
-    rows +: (if (hasIndex) Seq(idxLoad(userId, modelId, cfg).assign(rows, "id", "vector"))
-      else Nil)
+  private def slicesOf(userId: String, modelId: String,
+      index: Option[graft.ml.IvfIndex], rows: DataFrame)
+      : (Seq[graft.operators.EpochStore.Layout], Seq[DataFrame]) = {
+    val armed = statsArmed(userId, modelId)
+    val out = if (index.isDefined || armed) rows.localCheckpoint(true) else rows
+    (Seq(dataLayout(userId, modelId) -> out) ++
+      index.map(i => graft.ml.IvfIndex.dataLayout(indexPath(userId, modelId)) ->
+        i.assign(out, "id", "vector")) ++
+      (if (armed) Seq(statsLayout(userId, modelId) -> countsOf(out)) else Nil)).unzip
+  }
   /** A store whose `data/` holds flat parquet but whose log is empty was
     * written before the epoch layout; nothing reads that format any more.
     * Checked only where the log is empty, so serving calls pay nothing.
@@ -101,28 +120,54 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
         s"unsupported pre-epoch store $userId/$modelId: $p holds flat " +
           "parquet and no epoch log; rebuild the store")
   }
-  private def hasIvf(userId: String, modelId: String, cfg: StoreConfig): Boolean =
-    cfg.indexType == "ivf" &&
-      fs.exists(new Path(s"${indexPath(userId, modelId)}/centroids"))
+  /** The index's `centroids.jsonl` as (modification time, length); None
+    * when the store has no index. This one `getFileStatus` is the whole
+    * existence check, and the stamp keys [[idxLoad]]'s cache.
+    */
+  private def ivfStamp(userId: String, modelId: String,
+      cfg: StoreConfig): Option[(Long, Long)] =
+    if (cfg.indexType != "ivf") None
+    else try {
+      val st = fs.getFileStatus(
+        new Path(s"${indexPath(userId, modelId)}/centroids/centroids.jsonl"))
+      Some((st.getModificationTime, st.getLen))
+    } catch { case _: java.io.FileNotFoundException => None }
   // Loaded-index cache: an IvfIndex instance is (path, centroids, metric,
   // log) — the centroids array and metric are immutable between rebuilds,
   // and the log/data are read lazily per search, so the instance stays
   // valid across appends, deletes, optimizes and vacuums. Loading it costs
   // 2-3 Spark jobs (buildmeta + centroids reads) PER SERVING CALL without
-  // the cache — pure fixed overhead on the catalog's single-writer
-  // discipline (r19 measurement: the metadata jobs dominated lifecycle
-  // queries). Invalidated wherever centroids are retired or rewritten
-  // (buildIndex / buildIndexWithCentroids / clear / drop); a different
-  // catalog instance (process restart) always re-reads from disk.
-  private val idxCache =
-    scala.collection.mutable.HashMap.empty[(String, String), graft.ml.IvfIndex]
-  private def idxInvalidate(userId: String, modelId: String): Unit =
-    idxCache.synchronized { idxCache.remove((userId, modelId)); () }
-  private def idxLoad(userId: String, modelId: String, cfg: StoreConfig): graft.ml.IvfIndex =
+  // the cache. A hit counts only while the centroids file still carries
+  // the stamp it was loaded under, so a rebuild by any catalog instance
+  // (or a clear or drop) is a miss, never stale centroids.
+  private val idxCache = scala.collection.mutable.HashMap
+    .empty[(String, String), ((Long, Long), graft.ml.IvfIndex)]
+  private def idxLoad(userId: String, modelId: String, cfg: StoreConfig,
+      stamp: (Long, Long)): graft.ml.IvfIndex =
     idxCache.synchronized {
-      idxCache.getOrElseUpdate((userId, modelId),
-        graft.ml.IvfIndex.load(spark, indexPath(userId, modelId), cfg.metric,
-          Some(storeLog(userId, modelId))))
+      idxCache.get((userId, modelId)).collect { case (`stamp`, idx) => idx }
+        .getOrElse {
+          val idx = graft.ml.IvfIndex.load(spark, indexPath(userId, modelId),
+            cfg.metric, Some(storeLog(userId, modelId)))
+          idxCache((userId, modelId)) = (stamp, idx)
+          idx
+        }
+    }
+  /** The store's index, or None when it has none. */
+  private def ivfIndex(userId: String, modelId: String,
+      cfg: StoreConfig): Option[graft.ml.IvfIndex] =
+    ivfStamp(userId, modelId, cfg).map(idxLoad(userId, modelId, cfg, _))
+  /** `search` on the store's index; `exact` when it has none, `useIndex`
+    * is off, or the index fails (reference
+    * service/optimized_vector_store.py:142-144 semantics).
+    */
+  private def viaIndex[T](userId: String, modelId: String, cfg: StoreConfig,
+      useIndex: Boolean = true)(search: graft.ml.IvfIndex => T)(exact: => T): T =
+    ivfStamp(userId, modelId, cfg).filter(_ => useIndex) match {
+      case Some(stamp) =>
+        try search(idxLoad(userId, modelId, cfg, stamp))
+        catch { case _: Exception => exact }
+      case None => exact
     }
 
   def exists(userId: String, modelId: String): Boolean =
@@ -171,12 +216,12 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
         meta.cast(MapType(StringType, StringType)).as("meta"),
         col("_dim_ok"))
       .drop("_dim_ok")
-    val hasIndex = hasIvf(userId, modelId, cfg)
-    // ids come from monotonically_increasing_id (nondeterministic): pin the
-    // batch once so the store write and the index append see identical rows
-    val out = if (hasIndex) validated.localCheckpoint(true) else validated
+    // ids come from monotonically_increasing_id (nondeterministic): the
+    // pin in slicesOf gives every layout identical rows
+    val (to, frames) = slicesOf(userId, modelId,
+      ivfIndex(userId, modelId, cfg), validated)
     val store = epochStore(userId, modelId)
-    val (epoch, n) = store.append { epoch =>
+    store.append { epoch =>
       if (epoch == 0L) requireEpochLayout(userId, modelId)
       // advance the id base BEFORE the writes: burning a stride on a failed
       // append is harmless (ids skip), but advancing after the commit could
@@ -187,143 +232,14 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       // incremental ANN maintenance: the same batch lands in the index's
       // slice (reference rebuilds the whole graph here —
       // service/optimized_vector_store.py:110-113; ours is O(batch))
-      store.writeSlice(slicesOf(userId, modelId, cfg, hasIndex, out), epoch)
-    }
-    maintainMetaStats(userId, modelId, epoch)
-    n
+      store.writeSlice(frames, epoch, to)
+    }._2
   }
 
-  /** Append-path statistics maintenance: when meta stats exist and were
-    * fresh at the PREVIOUS committed epoch, merge the batch's own counts
-    * and re-stamp at this commit — one batch-sized aggregation, so a
-    * store that ran [[refreshMetaStats]] once stays planable under
-    * append-only load indefinitely (the realistic serving shape).
-    * Layout-only commits (optimize, vacuum) RE-STAMP via
-    * [[reStampMetaStats]] — content is preserved, so are the numbers.
-    * Content-CHANGING commits re-arm too, each from data the commit
-    * already wrote: delete recomputes from its kept slice
-    * ([[rearmMetaStatsFromSlice]]) and clear publishes empty stats —
-    * so a store that armed its statistics once stays planable through
-    * its whole lifecycle with no further [[refreshMetaStats]] call.
-    * Absent stats cost one existence check here — nothing.
-    */
-  private def maintainMetaStats(
-      userId: String, modelId: String, epoch: Long): Unit = {
-    // already stale: refresh re-arms
-    val old = statsStampedAt(userId, modelId, storeLog(userId, modelId)
-      .committedEpochs().filter(_ < epoch).lastOption.getOrElse(-1L))
-      .getOrElse(return)
-    // count the batch from the slice JUST WRITTEN, never from the caller's
-    // lineage: re-executing an arbitrary (possibly nondeterministic) input
-    // a second time could stamp counts that differ from the committed rows
-    val batchCounts = sliceAt(userId, modelId, epoch)
-      .select(explode(col("meta")).as(Seq("key", "value")))
-      .groupBy(col("key"), col("value"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-    // the stamp rides through the aggregation as a null-key seed row with
-    // n=0 (sum = the stamp's exact 0) — see [[statsStampSeed]] for why a
-    // union ABOVE the aggregation is the wrong stage shape
-    val merged = old.select(col("key"), col("value"), col("n"))
-      .filter(col("key").isNotNull) // drop the old stamp row
-      .unionAll(batchCounts)
-      .unionByName(statsStampSeed().withColumn("n", lit(0L)))
-      .groupBy(col("key"), col("value")).agg(sum(col("n")).as("n"))
-      .withColumn("stats_epoch", lit(epoch))
-    publishMetaStats(userId, modelId)(tmp =>
-      merged.write.mode("overwrite").parquet(tmp))
-  }
-
-  /** The store rows one commit just wrote: its `epoch` slice. */
+  /** The store rows committed at `epoch`: its data slice. */
   private def sliceAt(userId: String, modelId: String, epoch: Long): DataFrame =
     graft.operators.EpochStore.read(spark, dataLayout(userId, modelId),
       Seq(dataLayout(userId, modelId).slice(epoch)))
-
-  /** The published stats when they are stamped at `epoch` (fresh as of
-    * it); None when absent or stale. `epoch` is evaluated only when stats
-    * exist, so a store without statistics pays no log read here.
-    */
-  private def statsStampedAt(
-      userId: String, modelId: String, epoch: => Long): Option[DataFrame] =
-    metaStatsFrame(userId, modelId).filter { stats =>
-      val stamped = stats.agg(max(col("stats_epoch"))).head()
-      !stamped.isNullAt(0) && stamped.getLong(0) == epoch
-    }
-
-  /** One NULL-key stamp row carried in every published stats table: it
-    * keeps `max(stats_epoch)` defined even when the store has no
-    * (key, value) pairs at all, so EMPTY statistics read as fresh true
-    * zeros instead of absent (a cleared store, or one whose rows carry
-    * no metadata, is planable too). Map keys are never NULL, so the row
-    * cannot collide with data, and every consumer's key-equality
-    * predicate skips it.
-    */
-  private def statsStampRow(epoch: Long): DataFrame =
-    // range with an explicit single partition: a bare spark.range(1)
-    // plans defaultParallelism (near-empty) partitions, so every union
-    // with it dragged 32 extra tasks into the map stage
-    spark.range(0, 1, 1, 1).select(
-      lit(null).cast("string").as("key"),
-      lit(null).cast("string").as("value"),
-      lit(0L).as("n"),
-      lit(epoch).as("stats_epoch"))
-
-  /** The stamp as a pre-aggregation seed row: unioned into the (key,
-    * value) pairs BELOW the groupBy, it aggregates to exactly the
-    * [[statsStampRow]] shape — `count(col("key"))` is 0 for the null-key
-    * group and identical to `count(1)` for data groups (map keys are
-    * never null) — while keeping every leaf of the stats write's reduce
-    * stage a shuffle stage. A stamp unioned ABOVE the aggregation put a
-    * non-shuffle leaf (range/local scan) in the same stage as the
-    * shuffle read, which disables AQE partition coalescing for the whole
-    * stage: every KB-sized stats publish ran (and wrote) 32 near-empty
-    * tasks/files on the append path.
-    */
-  private def statsStampSeed(): DataFrame =
-    spark.range(0, 1, 1, 1).select(
-      lit(null).cast("string").as("key"),
-      lit(null).cast("string").as("value"))
-
-  /** Destructive-commit statistics re-arm: a REPLACE epoch's directory is
-    * the store's entire logical content, so statistics that were fresh
-    * before the delete are recomputed EXACTLY from the kept slice the
-    * delete just wrote — one batch-sized aggregation inside the same
-    * call, and the adaptive planner keeps its statistics through deletes
-    * instead of live-counting until a manual [[refreshMetaStats]].
-    * Already-stale stats stay stale (the refresh discipline unchanged).
-    * `prevLast` is the newest committed epoch BEFORE the replace (the
-    * commit prunes the log, so it cannot be recovered afterwards).
-    */
-  private def rearmMetaStatsFromSlice(
-      userId: String, modelId: String, prevLast: Long, epoch: Long): Unit = {
-    statsStampedAt(userId, modelId, prevLast).getOrElse(return)
-    // stamp-as-seed-row: see [[statsStampSeed]]
-    val counts = sliceAt(userId, modelId, epoch)
-      .select(explode(col("meta")).as(Seq("key", "value")))
-      .unionByName(statsStampSeed())
-      .groupBy(col("key"), col("value"))
-      .agg(org.apache.spark.sql.functions.count(col("key")).as("n"))
-      .withColumn("stats_epoch", lit(epoch))
-    publishMetaStats(userId, modelId)(tmp =>
-      counts.write.mode("overwrite").parquet(tmp))
-  }
-
-  /** Layout-only commits (optimize's replace, vacuum's fold) preserve the
-    * store's LOGICAL content, so statistics fresh before the commit stay
-    * numerically correct — re-stamp them at the new epoch instead of
-    * letting them lapse: the retention/compaction levers cost no
-    * planability. `prevLast` is the newest committed epoch BEFORE the
-    * commit (a replace prunes the whole history, so it cannot be
-    * recovered from the log afterwards).
-    */
-  private def reStampMetaStats(
-      userId: String, modelId: String, prevLast: Long, epoch: Long): Unit = {
-    val old = statsStampedAt(userId, modelId, prevLast).getOrElse(return)
-    val restamped = old.filter(col("key").isNotNull).drop("stats_epoch")
-      .withColumn("stats_epoch", lit(epoch))
-      .unionByName(statsStampRow(epoch))
-    publishMetaStats(userId, modelId)(tmp =>
-      restamped.write.mode("overwrite").parquet(tmp))
-  }
 
   /** [[queryAdaptive]] with a TYPED filter ([[TypedMeta]] Python-`==`
     * semantics, the [[queryTyped]] pairing). Single-key live queries
@@ -413,15 +329,9 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
               hits.schema))
       }
     }
-    if (hasIvf(userId, modelId, cfg)) {
-      try {
-        idxLoad(userId, modelId, cfg).searchAdaptive(queryVec, k, nProbe,
-          predicate = Some(pred), asOf = asOf, preFilterCap = preFilterCap,
-          matchCount = hint, matchBound = bound)
-      } catch {
-        case _: Exception => exactScan
-      }
-    } else exactScan
+    viaIndex(userId, modelId, cfg)(_.searchAdaptive(queryVec, k, nProbe,
+      predicate = Some(pred), asOf = asOf, preFilterCap = preFilterCap,
+      matchCount = hint, matchBound = bound))(exactScan)
   }
 
   /** Scan (reference _load_store, service/optimized_vector_store.py:225-239):
@@ -503,20 +413,17 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       targetFileBytes: Long = 128L << 20): (Int, Long) = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     require(exists(userId, modelId), s"store $userId/$modelId does not exist")
-    // the re-stamp needs the newest pin BEFORE the fold commit
-    val prevLast = storeLog(userId, modelId).committedEpochs()
-      .lastOption.getOrElse(-1L)
     // re-slice the data fold to the file-size target: the whole point is
     // consolidating many tiny append slices into few well-sized files. The
     // index side folds ITS OWN slices, never a re-assignment of the store
     // fold: when the index was built AFTER some appends, its build slice
     // already covers those epochs' rows (caught by CatalogOpsSpec's
-    // build-after-append sweep leg)
+    // build-after-append sweep leg). The statistics fold is the union of
+    // the folded slices, written only when every folded epoch has one
     val store = epochStore(userId, modelId, targetFileBytes)
     store.vacuum(keepLast) match {
       case None => (0, 0L)
       case Some(fold) =>
-        reStampMetaStats(userId, modelId, prevLast, fold.target)
         // retention is the maintenance pass a LONG-LIVED ingest reaches
         // (streams vacuum via autoVacuumKeepLast; they never call
         // optimize), so the index-drift advisory must fire here too —
@@ -536,7 +443,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     * (service/optimized_vector_store.py:110-113).
     *
     * REBUILD semantics (an index already exists): the old index is
-    * retired FIRST, centroids before data — `hasIvf` flips off at the
+    * retired FIRST, centroids before data — `ivfStamp` reads None from the
     * first delete, so a crash anywhere in the rebuild window leaves a
     * store that serves correct (exact-scan) answers until the next
     * build. Without this, an epoch store's stale index epoch slices
@@ -559,17 +466,18 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     // delete on centroids existing would let a prior rebuild's crash —
     // centroids gone, stale data slices still present — skip the retire
     // on the NEXT rebuild and resurrect double-serving slices
-    idxInvalidate(userId, modelId)
     fs.delete(new Path(s"${indexPath(userId, modelId)}/centroids"), true)
     fs.delete(new Path(s"${indexPath(userId, modelId)}/data"), true)
     // the index data lands under the newest committed store epoch (it
     // covers exactly the committed rows the build read); the index only
     // becomes load-bearing when the config flips below
     val built = build(load(userId, modelId), cfg)
-    writeConfig(cfgPath, cfg.copy(indexType = "ivf"), idBase)
+    val ivfCfg = cfg.copy(indexType = "ivf")
+    writeConfig(cfgPath, ivfCfg, idBase)
     // seed the cache with the just-built instance: the first serving call
     // after a build would otherwise immediately re-read what build wrote
-    idxCache.synchronized { idxCache((userId, modelId)) = built }
+    ivfStamp(userId, modelId, ivfCfg).foreach(stamp =>
+      idxCache.synchronized { idxCache((userId, modelId)) = (stamp, built) })
   }
 
   /** [[buildIndex]] around an EXPLICIT coarse quantizer instead of k-means
@@ -606,15 +514,13 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       maxImbalance: Double = graft.ml.IvfIndex.DefaultMaxImbalance,
       maxAppendedFraction: Double = graft.ml.IvfIndex.DefaultMaxAppendedFraction)
       : Option[graft.ml.IvfIndex.Maintenance] = {
-    val cfg = config(userId, modelId)
-    if (!hasIvf(userId, modelId, cfg)) None
     // an existing-but-unreadable index (torn centroids write, corrupt
     // parquet) reads as None — exactly the serving paths' degrade-to-
     // exact discipline: an advisory consulted AFTER a vacuum/optimize
     // commit must never fail the maintenance operation itself
     // ([[healthCheck]] is the surface that reports unreadable indexes)
-    else scala.util.Try(idxLoad(userId, modelId, cfg)
-      .maintenance(maxImbalance, maxAppendedFraction)).toOption
+    viaIndex(userId, modelId, config(userId, modelId))(idx =>
+      Option(idx.maintenance(maxImbalance, maxAppendedFraction)))(None)
   }
 
   /** [[graft.ml.IvfIndex.tuneNProbe]] served from a tenant store: the
@@ -632,8 +538,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       targetRecall: Double,
       maxProbe: Int = 0): Option[graft.ml.IvfIndex.NProbeTuning] = {
     val cfg = config(userId, modelId)
-    if (!hasIvf(userId, modelId, cfg)) None
-    else scala.util.Try(idxLoad(userId, modelId, cfg)).toOption
+    scala.util.Try(ivfIndex(userId, modelId, cfg)).toOption.flatten
       .map(_.tuneNProbe(queries, k, targetRecall, maxProbe))
   }
 
@@ -650,8 +555,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       maxPsi: Double = graft.ml.IvfIndex.DefaultMaxPsi)
       : Option[graft.ml.IvfIndex.AssignmentDrift] = {
     val cfg = config(userId, modelId)
-    if (!hasIvf(userId, modelId, cfg)) None
-    else scala.util.Try(idxLoad(userId, modelId, cfg)).toOption
+    scala.util.Try(ivfIndex(userId, modelId, cfg)).toOption.flatten
       .map(_.assignmentDrift(
         batch.select(monotonically_increasing_id().as("id"),
           col("vector")),
@@ -714,14 +618,8 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     def exact = Knn.topK(
       asOf.fold(load(userId, modelId))(e => loadAt(userId, modelId, e)),
       queryVec, k, cfg.metric, metadataFilter = metadataFilter)
-    if (useIndex && hasIvf(userId, modelId, cfg)) {
-      try {
-        idxLoad(userId, modelId, cfg)
-          .search(queryVec, k, nProbe, metadataFilter, asOf = asOf)
-      } catch {
-        case _: Exception => exact // reference :142-144 semantics
-      }
-    } else exact
+    viaIndex(userId, modelId, cfg, useIndex)(
+      _.search(queryVec, k, nProbe, metadataFilter, asOf = asOf))(exact)
   }
 
   /** kNN query with a TYPED metadata filter — reference Python-`==`
@@ -749,14 +647,8 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     def exact = Knn.topK(
       asOf.fold(load(userId, modelId))(e => loadAt(userId, modelId, e)),
       queryVec, k, cfg.metric, predicate = pred)
-    if (useIndex && hasIvf(userId, modelId, cfg)) {
-      try {
-        idxLoad(userId, modelId, cfg)
-          .search(queryVec, k, nProbe, predicate = pred, asOf = asOf)
-      } catch {
-        case _: Exception => exact
-      }
-    } else exact
+    viaIndex(userId, modelId, cfg, useIndex)(
+      _.search(queryVec, k, nProbe, predicate = pred, asOf = asOf))(exact)
   }
 
   /** [[query]] with cardinality-adaptive filter planning (the
@@ -822,20 +714,13 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
           when(coalesce(predicate, lit(true)), lit(1))).as("matched"))
       .filter(!predicate)
     // the kept set becomes a REPLACE epoch in the store layout AND (when
-    // an index exists) the index layout, flipped together by one commit —
-    // the index can no longer go stale against a delete. The kept lineage
-    // reads only committed slices, so the index write may re-run it
-    // safely; pin it anyway when an index exists so the scan happens once.
-    val cfg = config(userId, modelId)
-    val hasIndex = hasIvf(userId, modelId, cfg)
-    val out = if (hasIndex) kept.localCheckpoint(true) else kept
-    // the replace commit prunes the log: the pre-replace last epoch must
-    // be captured before it
-    val prevLast = storeLog(userId, modelId).committedEpochs()
-      .lastOption.getOrElse(-1L)
-    val (epoch, _) = epochStore(userId, modelId)
-      .replace(slicesOf(userId, modelId, cfg, hasIndex, out))
-    rearmMetaStatsFromSlice(userId, modelId, prevLast, epoch)
+    // they exist) the index and statistics layouts, flipped together by
+    // one commit — neither can go stale against a delete. slicesOf pins
+    // the kept set when more than one layout reads it, so the scan (and
+    // the caller's predicate) runs once.
+    val (to, frames) = slicesOf(userId, modelId,
+      ivfIndex(userId, modelId, config(userId, modelId)), kept)
+    epochStore(userId, modelId).replace(frames, to = to)
     obs.get("matched").asInstanceOf[Long]
   }
 
@@ -924,19 +809,14 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     // (rescanning all M for one unlucky query is ~2x the work at M large).
     // The rescan carries the SAME pairPredicate, so healed rows still
     // satisfy the underfilled query's own constraint.
-    if (useIndex && hasIvf(userId, modelId, cfg)) {
-      try {
-        val res = idxLoad(userId, modelId, cfg)
-          .searchBatch(queries, k, nProbe, asOf = asOf,
-            pairPredicate = pairPredicate)
-          .localCheckpoint(true)
-        healUnderfill(res, queries, ids, k)(underQ =>
-          Knn.batchTopK(underQ, store, k, cfg.metric,
-            pairPredicate = pairPredicate))
-      } catch {
-        case _: Exception => exact
-      }
-    } else exact
+    viaIndex(userId, modelId, cfg, useIndex) { idx =>
+      val res = idx.searchBatch(queries, k, nProbe, asOf = asOf,
+          pairPredicate = pairPredicate)
+        .localCheckpoint(true)
+      healUnderfill(res, queries, ids, k)(underQ =>
+        Knn.batchTopK(underQ, store, k, cfg.metric,
+          pairPredicate = pairPredicate))
+    }(exact)
   }
 
   /** The driver-built query frame every Seq-based batch surface feeds the
@@ -1210,8 +1090,8 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       graft.ml.IvfIndex.AdaptiveSearch(path, m, hits,
         boundViolated = viaBound && m > preFilterCap)
     }
-    if (!hasIvf(userId, modelId, cfg))
-      return filteredBatch(graft.ml.IvfIndex.PathExactScan)
+    val stamp = ivfStamp(userId, modelId, cfg)
+      .getOrElse(return filteredBatch(graft.ml.IvfIndex.PathExactScan))
     // decision: exact hint > conjunction bound > live count — the bound
     // only ever proves the CHEAP side (prefilter fits); past the cap it
     // proves nothing and the live count decides
@@ -1232,7 +1112,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       // path label stays ivf_postfilter (that is the plan that was
       // chosen; healing is a per-query repair, not a re-plan).
       try {
-        val res = probedBatch(idxLoad(userId, modelId, cfg), queries)
+        val res = probedBatch(idxLoad(userId, modelId, cfg, stamp), queries)
           .localCheckpoint(true)
         val healed = healUnderfill(res, queries, ids, k)(underQ =>
           Knn.batchTopK(underQ, base.filter(pred), k, cfg.metric,
@@ -1367,15 +1247,10 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     val before = filesUnder(dst)
     val nFiles = math.max(1,
       math.ceil(before.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-    val cfg = config(userId, modelId)
-    val hasIndex = hasIvf(userId, modelId, cfg)
-    val df = load(userId, modelId).repartition(nFiles)
-    val out = if (hasIndex) df.localCheckpoint(true) else df
-    val prevLast = storeLog(userId, modelId).committedEpochs()
-      .lastOption.getOrElse(-1L)
-    val (epoch, _) = epochStore(userId, modelId)
-      .replace(slicesOf(userId, modelId, cfg, hasIndex, out))
-    reStampMetaStats(userId, modelId, prevLast, epoch)
+    val (to, frames) = slicesOf(userId, modelId,
+      ivfIndex(userId, modelId, config(userId, modelId)),
+      load(userId, modelId).repartition(nFiles))
+    epochStore(userId, modelId).replace(frames, to = to)
     (before.size, filesUnder(dst).size)
   }
 
@@ -1415,7 +1290,8 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       // must not masquerade as an index-desync problem
       if (c.indexType == "ivf" && dataOk) {
         try {
-          val idx = idxLoad(userId, modelId, c)
+          val idx = ivfIndex(userId, modelId, c).getOrElse(
+            throw new IllegalStateException("no centroids.jsonl; rebuild the index"))
           val indexed = idx.listStats()
             .agg(org.apache.spark.sql.functions.sum(col("n_vectors"))).head().getLong(0)
           if (indexed != nRows)
@@ -1436,153 +1312,90 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     * exact scan while no centroids exist).
     */
   def clear(userId: String, modelId: String): Unit = {
-    idxInvalidate(userId, modelId)
     graft.operators.EpochStore.forgetSchemas(s"${storePath(userId, modelId)}/")
-    statsMemoInvalidate(userId, modelId)
     fs.delete(new Path(dataPath(userId, modelId)), true)
     fs.delete(new Path(epochsPath(userId, modelId)), true)
     fs.delete(new Path(indexPath(userId, modelId)), true)
     fs.delete(new Path(metaStatsPath(userId, modelId)), true)
-    fs.delete(new Path(metaStatsTmpPath(userId, modelId)), true)
-    fs.delete(new Path(metaStatsOldPath(userId, modelId)), true)
-    // an empty store has EMPTY statistics, not absent ones: publish the
-    // bare stamp row at -1 (the empty log's epoch, [[EpochLog.nextEpoch]]'s
-    // base) so the first post-clear append's [[maintainMetaStats]] merges
-    // onto it — the store stays planable through a clear with no
-    // [[refreshMetaStats]] call anywhere in its lifecycle. Guarded on
-    // existence: clear of a never-created store stays a pure no-op
-    // instead of littering a store-shaped directory with a stamp file.
-    if (exists(userId, modelId))
-      publishMetaStats(userId, modelId)(tmp =>
-        statsStampRow(-1L).write.mode("overwrite").parquet(tmp))
+    // an empty store has EMPTY statistics, not absent ones: an empty
+    // `meta_stats/` is armed for the empty log, so lookups read true zeros
+    // and every later commit lands its slice — the store stays planable
+    // through a clear with no [[refreshMetaStats]] call. Guarded on
+    // existence: clear of a never-created store stays a pure no-op.
+    if (exists(userId, modelId)) fs.mkdirs(new Path(metaStatsPath(userId, modelId)))
   }
 
   private def metaStatsPath(userId: String, modelId: String) =
     s"${storePath(userId, modelId)}/meta_stats"
-  private def metaStatsTmpPath(userId: String, modelId: String) =
-    s"${storePath(userId, modelId)}/_meta_stats_tmp"
-  private def metaStatsOldPath(userId: String, modelId: String) =
-    s"${storePath(userId, modelId)}/_meta_stats_old"
 
-  /** Resolve the published stats table, surviving the publish swap
-    * window: a crashed swap's rename-aside backup (the PREVIOUS stats,
-    * stale at worst, never torn) is HEALED here — promoted back to the
-    * live dir BEFORE the read, not merely read in place, because
-    * consumers build LAZY plans over the returned frame: maintain/
-    * re-stamp pass those plans into the next publish, whose own heal
-    * would rename the aside out from under the captured file paths
-    * (FileNotFoundException mid-publish). Promoting at read time means
-    * every plan references the live dir and the publish heal is a no-op.
-    * Every stats consumer reads through this.
+  /** The epochs holding a statistics slice, each with its slice's
+    * modification time; None when `meta_stats/` is absent (a store that
+    * was never armed — one listing, no log read).
     */
-  private def metaStatsFrame(
-      userId: String, modelId: String): Option[DataFrame] = {
-    val dst = new Path(metaStatsPath(userId, modelId))
-    val old = new Path(metaStatsOldPath(userId, modelId))
-    // read-time healing MUTATES the store dir, so two concurrent readers
-    // after a crash can race the rename: the loser's rename returns false
-    // because the WINNER already promoted the aside — re-check the
-    // destination before declaring failure (only a still-absent dst means
-    // the heal really failed and the query cannot proceed)
-    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst) &&
-        !fs.exists(dst))
-      throw new IllegalStateException(
-        s"meta stats read failed: could not heal aside dir $old -> $dst")
-    if (!fs.exists(dst)) None
-    else {
-      // the stats schema is one fixed shape for every store (the publish
-      // writers are the only producers): infer it once per JVM instead of
-      // paying a schema-inference job on every adaptive-serving read
-      Some(graft.operators.EpochStore.cachedParquet(spark.read,
-        VectorStoreCatalog.StatsSchemaKey, Seq(dst.toString)))
-    }
-  }
+  private def statsSlices(userId: String, modelId: String): Option[Map[Long, Long]] =
+    try Some(fs.listStatus(new Path(metaStatsPath(userId, modelId)))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
+      .flatMap(st => st.getPath.getName.stripPrefix("epoch=").toLongOption
+        .map(_ -> st.getModificationTime))
+      .toMap)
+    catch { case _: java.io.FileNotFoundException => None }
 
-  /** Atomic stats publish with a RENAME-ASIDE swap: the parquet lands in
-    * a temp dir, the previous stats move aside (never deleted first),
-    * the new dir renames into place, and only then is the aside retired —
-    * so a crash ANYWHERE in the window leaves either the new or the
-    * PREVIOUS stats readable ([[metaStatsFrame]] falls back to the
-    * aside): stale at worst, never torn, never a lost-planability gap
-    * until the next refresh (the pre-r18 delete-then-rename left stats
-    * absent across the window). A torn temp write leaves the live dir
-    * untouched. Directory rename is atomic on HDFS-like stores; on
-    * object stores swap the renames for a commit-marker protocol.
-    * HDFS-style rename FAILS by returning false, not throwing — every
-    * rename is checked loudly (a silently-absent publish would read as
-    * armed to the caller).
+  /** Armed: `meta_stats/` holds a slice for every committed epoch. Only an
+    * armed store's commits write statistics; any other state reads as None
+    * (live count).
     */
-  private def publishMetaStats(
-      userId: String, modelId: String)(write: String => Unit): Unit = {
-    val tmp = metaStatsTmpPath(userId, modelId)
-    val dst = new Path(metaStatsPath(userId, modelId))
-    val old = new Path(metaStatsOldPath(userId, modelId))
-    fs.delete(new Path(tmp), true) // leftovers from a prior crash
-    // heal a crashed prior swap: the aside dir IS the current stats. A
-    // concurrent READER's read-time heal can win this rename (see
-    // [[metaStatsFrame]]) — a false return with dst now present is that
-    // benign race, not a failure
-    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst) &&
-        !fs.exists(dst))
-      throw new IllegalStateException(
-        s"meta stats publish failed: could not heal aside dir $old -> $dst")
-    write(tmp)
-    fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new IllegalStateException(
-        s"meta stats publish failed: rename-aside $dst -> $old returned " +
-          "false; the previous stats remain live and unchanged")
-    if (!fs.rename(new Path(tmp), dst))
-      throw new IllegalStateException(
-        s"meta stats publish failed: rename $tmp -> $dst returned false; " +
-          "the previous stats remain readable at the aside path")
-    fs.delete(old, true) // success: retire the fallback
-  }
+  private def statsArmed(userId: String, modelId: String): Boolean =
+    statsSlices(userId, modelId).exists(have =>
+      storeLog(userId, modelId).committedEpochs().forall(have.contains))
 
-  /** Persist per-(key, value) metadata cardinalities for the CURRENT
-    * committed epoch — the selectivity statistics [[queryAdaptive]]
-    * consults instead of running its per-query count job (measured by
-    * FilterProbe at commit 19fff4c as the broad-path overhead). One
-    * aggregation over the store's meta column; rows without meta are absent by
-    * construction (a filter cannot match them). Stats are epoch-stamped:
-    * a commit nothing maintained makes them stale and every consumer
-    * falls back to the live count automatically — but every commit
-    * family DOES maintain them in-line (append merges the batch, layout
-    * commits re-stamp, delete recomputes from its kept slice, clear
-    * publishes empty), so one refresh arms a store for life; this entry
-    * point remains for arming pre-existing stores and healing after a
-    * failed publish. Returns the number of distinct (key, value) rows
-    * written (the stamp row excluded).
+  /** Per-(key, value) row counts of `rows`' meta maps: one statistics
+    * slice. Rows without meta are absent by construction (a filter cannot
+    * match them).
+    */
+  private def countsOf(rows: DataFrame): DataFrame =
+    rows.select(explode(col("meta")).as(Seq("key", "value")))
+      .groupBy(col("key"), col("value"))
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
+
+  /** Arm the store's per-(key, value) metadata cardinalities — the
+    * selectivity statistics [[queryAdaptive]] consults instead of running
+    * its per-query count job (measured by FilterProbe at commit 19fff4c as
+    * the broad-path overhead). Writes the statistics slice of every
+    * committed epoch that lacks one, each counted from that epoch's data
+    * slice, written aside and renamed into place: a refresh that dies
+    * part-way leaves an unarmed store, never a torn slice. Once armed,
+    * every commit lands its own slice with its commit row, so one refresh
+    * arms a store for life. Returns the number of (key, value) rows
+    * written (0 when the store was already armed).
     */
   def refreshMetaStats(userId: String, modelId: String): Long = {
     require(exists(userId, modelId), s"store $userId/$modelId does not exist")
-    val epoch = storeLog(userId, modelId).committedEpochs()
-      .lastOption.getOrElse(-1L) // empty log: the stamp consumers expect
-    // the stamp rides through the aggregation as the null-key group (see
-    // [[statsStampSeed]]): count(key) keeps its n at the stamp's exact 0
-    // and the observation counts data rows only, so a store with NO
-    // metadata still arms (true zeros)
-    val tmp = load(userId, modelId)
-      .select(explode(col("meta")).as(Seq("key", "value")))
-      .unionByName(statsStampSeed())
-      .groupBy(col("key"), col("value"))
-      .agg(org.apache.spark.sql.functions.count(col("key")).as("n"))
-      .withColumn("stats_epoch", lit(epoch))
-    val obs = org.apache.spark.sql.Observation()
-    publishMetaStats(userId, modelId)(dir =>
-      tmp.observe(obs,
-          org.apache.spark.sql.functions.count(col("key")).as("rows"))
-        .write.mode("overwrite").parquet(dir))
-    obs.get("rows").asInstanceOf[Long]
+    val stats = statsLayout(userId, modelId)
+    val have = statsSlices(userId, modelId).getOrElse(Map.empty)
+    val committed = storeLog(userId, modelId).committedEpochs()
+    if (committed.isEmpty) requireEpochLayout(userId, modelId)
+    fs.mkdirs(new Path(stats.dir)) // an empty log arms with no slice
+    committed.filterNot(have.contains).map { epoch =>
+      val aside = new Path(s"${stats.dir}/_epoch=$epoch")
+      val obs = org.apache.spark.sql.Observation()
+      countsOf(sliceAt(userId, modelId, epoch))
+        .observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(aside.toString)
+      // HDFS-style rename fails by returning false, not throwing
+      if (!fs.rename(aside, new Path(stats.slice(epoch))))
+        throw new IllegalStateException(
+          s"meta stats refresh failed: rename $aside -> ${stats.slice(epoch)}")
+      obs.get("rows").asInstanceOf[Long]
+    }.sum
   }
 
   /** Exact match count for a single-key string filter from the persisted
-    * statistics — `Some(n)` only when stats exist AND are stamped with
-    * the store's current committed epoch (stale stats never plan a
-    * query). Sums the raw value and its TypedMeta JSON-string twin, the
-    * same duality [[graft.operators.Knn.metadataPredicate]] matches, so
-    * the number equals what the live count would return. An absent
-    * (key, value) pair under fresh stats is a true zero.
+    * statistics — `Some(n)` only when the store is armed (a statistics
+    * slice at every committed epoch; anything else never plans a query).
+    * Sums the raw value and its TypedMeta JSON-string twin, the same
+    * duality [[graft.operators.Knn.metadataPredicate]] matches, so the
+    * number equals what the live count would return. An absent
+    * (key, value) pair under armed stats is a true zero.
     */
   def metaStatsCount(
       userId: String,
@@ -1592,7 +1405,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     metaStatsCounts(userId, modelId, Seq(key -> value)).head
 
   /** Multi-key form of [[metaStatsCount]]: ONE aggregation pass over the
-    * stats table answers every key of a conjunction (the per-key loop
+    * stats slices answers every key of a conjunction (the per-key loop
     * paid one job per key — pure fixed cost, since each pass scanned the
     * same KB-sized table). Same freshness bar, per key.
     */
@@ -1603,78 +1416,56 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     metaStatsCountsWith(userId, modelId, filter.map { case (k0, v0) =>
       col("key") === k0 &&
         (col("value") === v0 || col("value") === TypedMeta.jsonString(v0))
-    }, memoKey = Some(("str", filter)))
+    }, "str", filter)
 
-  /** FRESH lookup results memoized per (filter, committed epoch, stats-dir
-    * mtime): the count of a (key, value) pair under statistics stamped at
-    * epoch E is a pure function of the store content committed at E — a
-    * same-epoch [[refreshMetaStats]] re-publish recomputes identical
-    * numbers, and every content-changing commit advances the epoch (a new
-    * memo key). The stats DIRECTORY's modification time rides in the key
-    * so any out-of-band republish or repair of the stats files (a
-    * different writer, an operator healing a store) is a memo miss, never
-    * a stale hit; an absent dir skips the memo entirely. Stale/absent
-    * lookups are NEVER memoized (stats may be published later at the same
-    * epoch, flipping None to Some), and [[drop]] invalidates (a recreated
-    * store restarts its epoch numbering). The `surface` tag keeps the
-    * string and typed predicates for the same (key, value) pair from
-    * colliding. Saves one KB-table aggregation job per repeated lookup on
-    * the serving path (a declared adaptive query pays the same lookup 2-3
-    * times: the freshness require and each phase's planning).
+  /** Lookup results memoized on the freshness check's own inputs: the
+    * store log's newest commit file ([[graft.operators.EpochLog.head]])
+    * and the listing of `meta_stats/` (each slice with its modification
+    * time). A count is a pure function of the committed slices, so any
+    * commit, clear, refresh or slice rewrite — by this catalog instance or
+    * another — is a miss, never a stale hit; an absent `meta_stats/` skips
+    * the memo. The `surface` tag keeps the string and typed predicates for
+    * the same (key, value) pair from colliding. Saves one stats
+    * aggregation job per repeated lookup on the serving path (a declared
+    * adaptive query pays the same lookup 2-3 times: the freshness require
+    * and each phase's planning).
     */
   private val statsMemo = scala.collection.mutable.HashMap
-    .empty[(String, String, Long, Long, String, Seq[(String, Any)]),
+    .empty[(String, Option[String], Map[Long, Long], String, Seq[(String, Any)]),
       Seq[Option[Long]]]
 
-  private def statsMemoInvalidate(userId: String, modelId: String): Unit =
-    statsMemo.synchronized {
-      statsMemo.filterInPlace { case ((u, m, _, _, _, _), _) =>
-        u != userId || m != modelId
-      }
-      ()
-    }
-
+  /** Counts of `preds` summed over the committed epochs' statistics
+    * slices; None for every predicate unless the store is armed — a lookup
+    * never reads counts from a commit that has not landed.
+    */
   private def metaStatsCountsWith(
       userId: String,
       modelId: String,
       preds: Seq[org.apache.spark.sql.Column],
-      memoKey: Option[(String, Seq[(String, Any)])] = None): Seq[Option[Long]] = {
+      surface: String,
+      filter: Seq[(String, Any)]): Seq[Option[Long]] = {
     if (preds.isEmpty) return Seq.empty
-    // -1 is the EMPTY log's epoch (nextEpoch's base): it can never equal
-    // a committed epoch, so empty-store stats stamped -1 read as fresh
-    // while stats stamped -1 on a store that has since committed read
-    // stale — the pre-r18 getOrElse(0L) collided with the first commit
-    val cur = storeLog(userId, modelId).committedEpochs()
-      .lastOption.getOrElse(-1L)
-    val fullKey = memoKey.flatMap { case (surface, f) =>
-      val dst = new Path(metaStatsPath(userId, modelId))
-      val mtime =
-        try {
-          if (fs.exists(dst)) fs.getFileStatus(dst).getModificationTime
-          else -1L
-        } catch { case _: java.io.IOException => -1L }
-      if (mtime < 0) None
-      else Some((userId, modelId, cur, mtime, surface, f))
-    }
-    fullKey.flatMap(k => statsMemo.synchronized(statsMemo.get(k)))
-      .foreach(hit => return hit)
-    val df = metaStatsFrame(userId, modelId)
+    val slices = statsSlices(userId, modelId)
       .getOrElse(return preds.map(_ => None))
-    val aggs = preds.zipWithIndex.map { case (p, i) =>
-      coalesce(sum(when(p, col("n"))), lit(0L)).as(s"m$i")
-    }
-    val row = df.agg(max(col("stats_epoch")).as("e"), aggs: _*).head()
-    if (row.isNullAt(0) || row.getLong(0) != cur) preds.map(_ => None)
-    else {
-      val fresh = preds.indices.map(i => Some(row.getLong(i + 1)))
-      fullKey.foreach { k =>
-        statsMemo.synchronized {
-          if (statsMemo.size > 4096) statsMemo.clear() // bound the memo
-          statsMemo(k) = fresh
-        }
+    val log = storeLog(userId, modelId)
+    val key = (metaStatsPath(userId, modelId), log.head(), slices, surface, filter)
+    statsMemo.synchronized(statsMemo.get(key)).foreach(hit => return hit)
+    val epochs = log.committedEpochs()
+    val counts =
+      if (!epochs.forall(slices.contains)) preds.map(_ => None)
+      else if (epochs.isEmpty) preds.map(_ => Some(0L))
+      else {
+        val stats = statsLayout(userId, modelId)
+        val aggs = preds.map(p => coalesce(sum(when(p, col("n"))), lit(0L)))
+        val row = graft.operators.EpochStore.read(spark, stats,
+          epochs.map(stats.slice)).agg(aggs.head, aggs.tail: _*).head()
+        preds.indices.map(i => Some(row.getLong(i)))
       }
-      fresh
+    statsMemo.synchronized {
+      if (statsMemo.size > 4096) statsMemo.clear() // bound the memo
+      statsMemo(key) = counts
     }
+    counts
   }
 
   /** [[metaStatsCount]] for a TYPED filter value — the stored-encoding
@@ -1686,8 +1477,7 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
     * (1 == 1.0 == true), quoted-string identity ("1" != 1), and the
     * legacy bare-string fallback all carry over for free because they
     * are properties of the predicate, not of where it runs. Same
-    * freshness bar: `Some(n)` only when stats are stamped at the
-    * current committed epoch.
+    * freshness bar: `Some(n)` only when the store is armed.
     */
   def metaStatsCountTyped(
       userId: String,
@@ -1704,16 +1494,17 @@ class VectorStoreCatalog(spark: SparkSession, val root: String) {
       filter: Seq[(String, Any)]): Seq[Option[Long]] =
     metaStatsCountsWith(userId, modelId, filter.map { case (k0, v0) =>
       col("key") === k0 && TypedMeta.typedEqualsRaw(col("value"), v0)
-    }, memoKey = Some(("typed", filter)))
+    }, "typed", filter)
 
   /** Drop the store entirely (reference delete_store, api/routes/admin.py:74-112). */
   def drop(userId: String, modelId: String, force: Boolean = false): Unit = {
     if (!force && exists(userId, modelId) && count(userId, modelId) > 0)
       throw new IllegalStateException(
         s"store $userId/$modelId is non-empty; pass force=true (reference admin.py:74-112 semantics)")
-    idxInvalidate(userId, modelId)
     graft.operators.EpochStore.forgetSchemas(s"${storePath(userId, modelId)}/")
-    statsMemoInvalidate(userId, modelId)
+    // frees the centroids a dropped store would otherwise pin; the stamp,
+    // not this removal, keeps cache hits correct
+    idxCache.synchronized { idxCache.remove((userId, modelId)); () }
     fs.delete(new Path(storePath(userId, modelId)), true)
   }
 }
@@ -1724,10 +1515,6 @@ case class HealthReport(healthy: Boolean, issues: Seq[String], vectorCount: Long
 object VectorStoreCatalog {
   private[graft] lazy val slog =
     org.slf4j.LoggerFactory.getLogger("graft.VectorStoreCatalog")
-
-  /** Schema-cache key of every published meta-stats table (one fixed
-    * shape, one producer family) — see [[VectorStoreCatalog.metaStatsFrame]]. */
-  private val StatsSchemaKey = "graft.VectorStoreCatalog/meta_stats"
 
   /** The store layout's columns (its empty read). */
   private val StoreSchema = StructType(Seq(

@@ -303,6 +303,30 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
       "a full-k query after rebuild must return each row exactly once")
   }
 
+  test("a cached IVF index never outlives its centroids: after another " +
+      "catalog instance rebuilds the index, the next query probes the new one") {
+    val root = java.nio.file.Files.createTempDirectory("graft_catops").toString
+    val a = new VectorStoreCatalog(spark, root)
+    val b = new VectorStoreCatalog(spark, root)
+    a.create("u", "rb", StoreConfig(dimension = 2, indexType = "ivf"))
+    def unit(deg: Double) =
+      Seq(math.cos(math.toRadians(deg)), math.sin(math.toRadians(deg)))
+    // 36 unit vectors 10 degrees apart, none on an axis
+    a.addVectors("u", "rb",
+      (0 until 36).map(i => Tuple1(unit(5.0 + 10 * i).map(_.toFloat))).toDF("vector"))
+    a.buildIndexWithCentroids("u", "rb", Array(Array(1.0, 0.0), Array(-1.0, 0.0)))
+    def ids(c: VectorStoreCatalog) =
+      c.query("u", "rb", unit(45.0), 10, nProbe = 1).select($"id")
+        .collect().map(_.getLong(0)).toSet
+    val before = ids(a) // caches A's index
+    // B rebuilds around the y axis; its list 0 is the lower half-plane,
+    // which stale x-axis centroids would probe for this query
+    b.buildIndexWithCentroids("u", "rb", Array(Array(0.0, -1.0), Array(0.0, 1.0)))
+    val viaB = ids(b)
+    assert(viaB != before, "test setup: the rebuild must change the answer")
+    assert(ids(a) == viaB, "A must probe B's centroids, not its cached ones")
+  }
+
   test("heal semi-join form: past the isin threshold the underfilled set " +
       "restricts via broadcast semi/anti join — behavior identical") {
     val cat = newCatalog
@@ -382,6 +406,12 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
   // as measured on the per-family lifecycle code this protocol replaced
   private val VacuumJobBound = 8
   private val OptimizeJobBound = 7
+  // Spark jobs of one append / delete on the small ARMED flat store below,
+  // as measured when the statistics were a separately published table
+  // (a freshness aggregation plus a merge-and-publish job per commit);
+  // with the statistics as an epoch layout each runs 4
+  private val ArmedAppendJobBound = 6
+  private val ArmedDeleteJobBound = 5
 
   test("ingest and delete are single-pass (job counts via SparkListener)") {
     val cat = newCatalog
@@ -437,6 +467,23 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
       val optJobs = jobsDuring { cat.optimize("u", "jm") }
       assert(optJobs <= OptimizeJobBound,
         s"optimize on an IVF store ran $optJobs jobs (bound $OptimizeJobBound)")
+      // an ARMED flat store: each commit lands its statistics slice too
+      cat.create("u", "ja", StoreConfig(dimension = 4))
+      val tagged = (0 until 100).map(i =>
+        (Seq.fill(4)(0.5f), Map("t" -> (i % 3).toString))).toDF("vector", "meta")
+      cat.addVectors("u", "ja", tagged)
+      cat.refreshMetaStats("u", "ja")
+      val armedAdd = jobsDuring { assert(cat.addVectors("u", "ja", tagged) == 100L) }
+      assert(armedAdd <= ArmedAppendJobBound,
+        s"append on an armed store ran $armedAdd jobs (bound $ArmedAppendJobBound)")
+      val armedDel = jobsDuring {
+        assert(cat.deleteVectors("u", "ja", col("id") % 2 === 0) > 0)
+      }
+      assert(armedDel <= ArmedDeleteJobBound,
+        s"delete on an armed store ran $armedDel jobs (bound $ArmedDeleteJobBound)")
+      val live = cat.load("u", "ja")
+        .filter(element_at(col("meta"), "t") === "0").count()
+      assert(cat.metaStatsCount("u", "ja", "t", "0").contains(live))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -482,14 +529,24 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
       }
       assert(afterCommit >= 1,
         s"a commit must invalidate the memo (ran $afterCommit jobs)")
-      // a same-epoch republish changes the stats dir mtime: miss again
-      // (values identical — refresh recomputes the same numbers)
-      cat.refreshMetaStats("u", "sm")
-      val afterRepublish = jobsDuring {
+      // a refresh of an armed store writes nothing: still a hit
+      assert(cat.refreshMetaStats("u", "sm") == 0L)
+      val afterRefresh = jobsDuring {
         assert(cat.metaStatsCount("u", "sm", "par", "1").contains(24L))
       }
-      assert(afterRepublish >= 1,
-        s"a republish must invalidate the memo (ran $afterRepublish jobs)")
+      assert(afterRefresh == 0,
+        s"a refresh that wrote nothing must stay a hit ($afterRefresh jobs)")
+      // a same-epoch slice rewrite (values identical) changes the listing
+      // of meta_stats/: miss again
+      val slice = s"${cat.storePath("u", "sm")}/meta_stats/epoch=" +
+        cat.epochs("u", "sm").last
+      spark.read.parquet(slice).localCheckpoint(true)
+        .write.mode("overwrite").parquet(slice)
+      val afterRewrite = jobsDuring {
+        assert(cat.metaStatsCount("u", "sm", "par", "1").contains(24L))
+      }
+      assert(afterRewrite >= 1,
+        s"a slice rewrite must invalidate the memo (ran $afterRewrite jobs)")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -884,13 +941,16 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
     val live = cat.load("u", "ts")
       .filter(TypedMeta.typedPredicate(col("meta"), Map("pri" -> 1))).count()
     assert(live == 13L)
-    // DISCRIMINATOR: tamper the persisted stats (n *= 1000, stamp kept) —
+    // DISCRIMINATOR: tamper the current epoch's stats slice (n *= 1000) —
     // queryAdaptiveTyped must now report the tampered number, proving the
     // cardinality came from the statistics and not a live count
-    val statsDir = s"${cat.storePath("u", "ts")}/meta_stats"
-    val tampered = spark.read.parquet(statsDir)
-      .withColumn("n", col("n") * 1000).localCheckpoint(true)
-    tampered.write.mode("overwrite").parquet(statsDir)
+    def tamperCurrentSlice(): Unit = {
+      val slice = s"${cat.storePath("u", "ts")}/meta_stats/epoch=" +
+        cat.epochs("u", "ts").last
+      spark.read.parquet(slice).withColumn("n", col("n") * 1000)
+        .localCheckpoint(true).write.mode("overwrite").parquet(slice)
+    }
+    tamperCurrentSlice()
     val q = Seq.fill(8)(0.5)
     val viaStats = cat.queryAdaptiveTyped("u", "ts", q, 3, Map("pri" -> 1))
     assert(viaStats.matches == 13000L,
@@ -909,13 +969,9 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
     val afterDelete = cat.queryAdaptiveTyped("u", "ts", q, 3, Map("pri" -> 1))
     assert(afterDelete.matches == 13L)
     // prove post-delete planning is STATS-planned, not live-counted:
-    // tamper the re-armed stats (data rows only; the NULL-key stamp row
-    // keeps the freshness mark) and watch the tampered number surface
-    val tampered2 = spark.read.parquet(statsDir)
-      .withColumn("n",
-        when(col("key").isNotNull, col("n") * 1000).otherwise(col("n")))
-      .localCheckpoint(true)
-    tampered2.write.mode("overwrite").parquet(statsDir)
+    // tamper the slice the delete's replace epoch landed and watch the
+    // tampered number surface
+    tamperCurrentSlice()
     val viaStats2 = cat.queryAdaptiveTyped("u", "ts", q, 3, Map("pri" -> 1))
     assert(viaStats2.matches == 13000L,
       "the delete armed the planner: the very next adaptive query consults " +
@@ -923,7 +979,7 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("clear publishes empty statistics; the first post-clear append " +
-      "re-arms them through maintainMetaStats with no refresh call") {
+      "re-arms them with no refresh call") {
     val cat = newCatalog
     cat.create("u", "cl", StoreConfig(dimension = 4))
     cat.addVectors("u", "cl",
@@ -1136,60 +1192,110 @@ class CatalogOpsSpec extends AnyFunSuite with SparkSpec {
       "a cleared store reads zero through the log path too")
   }
 
-  test("meta stats publish is atomic: a leftover temp dir from a crashed " +
-      "publish is swept, and the published stats stay readable") {
+  /** The `meta_stats/` slice directory of `epoch`, and the epochs that
+    * hold one (the catalog's armed-check listing).
+    */
+  private def statsSlice(cat: VectorStoreCatalog, m: String, epoch: Long) =
+    new org.apache.hadoop.fs.Path(s"${cat.storePath("u", m)}/meta_stats/epoch=$epoch")
+  private def statsEpochs(cat: VectorStoreCatalog, m: String): Seq[Long] = {
+    val dir = new org.apache.hadoop.fs.Path(s"${cat.storePath("u", m)}/meta_stats")
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+      .map(_.getPath.getName).filter(_.startsWith("epoch="))
+      .map(_.stripPrefix("epoch=").toLong).sorted.toSeq
+  }
+
+  test("meta stats crash window: a slice at an uncommitted epoch is " +
+      "invisible, and the retried commit overwrites it") {
     val cat = newCatalog
-    cat.create("u", "at", StoreConfig(dimension = 8))
-    val rnd = new scala.util.Random(51)
+    cat.create("u", "cw", StoreConfig(dimension = 4))
     def batch(n: Int, tag: String) = (0 until n)
-      .map(_ => (Seq.fill(8)(rnd.nextFloat()), Map("tag" -> tag)))
-      .toDF("vector", "meta")
-    cat.addVectors("u", "at", batch(10, "a"))
-    // simulate a crash mid-publish: a partial temp dir already on disk
-    val tmpDir = new java.io.File(s"${cat.storePath("u", "at")}/_meta_stats_tmp")
-    tmpDir.mkdirs()
-    java.nio.file.Files.write(
-      new java.io.File(tmpDir, "part-junk.parquet").toPath, Array[Byte](1, 2))
-    cat.refreshMetaStats("u", "at")
-    assert(cat.metaStatsCount("u", "at", "tag", "a").contains(10L),
-      "publish must sweep the stale temp dir and land cleanly")
-    assert(!tmpDir.exists(),
-      "temp dir must not survive a successful publish (rename moves it)")
-    // append-path maintenance goes through the same atomic publish
-    cat.addVectors("u", "at", batch(5, "a"))
-    assert(cat.metaStatsCount("u", "at", "tag", "a").contains(15L))
-    // a crash BETWEEN rename-aside and rename-in leaves the PREVIOUS
-    // stats readable at the aside dir: consumers keep planning
-    // (stale-at-worst, here still fresh — no commit happened), no
-    // lost-planability gap until the next refresh
-    val statsDir = new org.apache.hadoop.fs.Path(
-      s"${cat.storePath("u", "at")}/meta_stats")
-    val oldDir = new org.apache.hadoop.fs.Path(
-      s"${cat.storePath("u", "at")}/_meta_stats_old")
-    val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(statsDir, oldDir), "test setup: simulate crashed swap")
-    assert(cat.metaStatsCount("u", "at", "tag", "a").contains(15L),
-      "the swap window must never lose the previous stats")
-    // the next publish HEALS the crashed swap (aside promoted, then the
-    // normal rename-aside cycle) — live dir back, aside retired
-    cat.refreshMetaStats("u", "at")
-    assert(fs.exists(statsDir) && !fs.exists(oldDir),
-      "publish must heal the aside dir and retire it on success")
-    assert(cat.metaStatsCount("u", "at", "tag", "a").contains(15L))
-    // the heal must also survive a MAINTAIN publish, whose merge plan
-    // LAZILY reads the stats it is replacing: the read-side promotion
-    // (metaStatsFrame) moves the aside to the live dir BEFORE the plan
-    // captures file paths, so the publish's own swap cannot rename the
-    // aside out from under the running merge
-    assert(fs.rename(statsDir, oldDir), "test setup: crash swap again")
-    cat.addVectors("u", "at", batch(5, "a")) // maintain merges through heal
-    assert(fs.exists(statsDir) && !fs.exists(oldDir))
-    assert(cat.metaStatsCount("u", "at", "tag", "a").contains(20L),
-      "append maintenance must merge onto the healed stats")
-    // both dirs gone reads as a clean live-count fallback, never an error
-    fs.delete(statsDir, true)
-    assert(cat.metaStatsCount("u", "at", "tag", "a").isEmpty,
-      "absent stats read as a clean live-count fallback, never an error")
+      .map(_ => (Seq.fill(4)(0.5f), Map("tag" -> tag))).toDF("vector", "meta")
+    cat.addVectors("u", "cw", batch(10, "a"))
+    cat.refreshMetaStats("u", "cw")
+    assert(cat.metaStatsCount("u", "cw", "tag", "a").contains(10L))
+    // an append that died after its stats slice landed and before its
+    // commit row: the slice sits at the next epoch, uncommitted
+    Seq(("tag", "a", 999L)).toDF("key", "value", "n")
+      .write.parquet(statsSlice(cat, "cw", 1L).toString)
+    assert(cat.metaStatsCount("u", "cw", "tag", "a").contains(10L),
+      "a slice at an uncommitted epoch must never be counted")
+    // the retry reuses the epoch and overwrites the orphan
+    cat.addVectors("u", "cw", batch(5, "a"))
+    assert(cat.epochs("u", "cw") == Seq(0L, 1L))
+    assert(cat.metaStatsCount("u", "cw", "tag", "a").contains(15L),
+      "the retried append must overwrite the orphan slice")
+    // armed stores hold exactly one slice per committed epoch, through
+    // every commit kind
+    cat.optimize("u", "cw")
+    cat.addVectors("u", "cw", batch(3, "b"))
+    cat.addVectors("u", "cw", batch(2, "b"))
+    cat.vacuum("u", "cw", keepLast = 1)
+    assert(statsEpochs(cat, "cw") == cat.epochs("u", "cw"))
+    assert(cat.metaStatsCount("u", "cw", "tag", "a").contains(15L))
+    assert(cat.metaStatsCount("u", "cw", "tag", "b").contains(5L))
+    val storeDir = new java.io.File(cat.storePath("u", "cw"))
+    assert(storeDir.list().filterNot(_.startsWith(".")).toSeq.sorted ==
+      Seq("_epochs", "_store_config.json", "data", "meta_stats"))
+  }
+
+  test("meta stats crash window: a partial refresh reads None; vacuum, " +
+      "delete and optimize leave a partially-armed store unarmed; the next " +
+      "refresh re-arms with exact counts") {
+    val cat = newCatalog
+    cat.create("u", "pa", StoreConfig(dimension = 4))
+    val fs = statsSlice(cat, "pa", 0L)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def batch(n: Int, tag: String) = (0 until n)
+      .map(_ => (Seq.fill(4)(0.5f), Map("tag" -> tag))).toDF("vector", "meta")
+    cat.addVectors("u", "pa", batch(10, "a"))
+    cat.addVectors("u", "pa", batch(6, "b"))
+    cat.addVectors("u", "pa", batch(4, "a"))
+    def counts = Seq("a", "b").map(cat.metaStatsCount("u", "pa", "tag", _))
+    // a refresh that dies after its first slice: a plain file where the
+    // epoch-1 slice must land makes that rename fail
+    val blocker = statsSlice(cat, "pa", 1L)
+    fs.create(blocker).close()
+    intercept[Exception](cat.refreshMetaStats("u", "pa"))
+    assert(fs.exists(statsSlice(cat, "pa", 0L)) &&
+      !fs.exists(statsSlice(cat, "pa", 2L)))
+    assert(counts == Seq(None, None), "a partial refresh must read None")
+    val live = cat.queryAdaptive("u", "pa", Seq.fill(4)(0.5), 3, Map("tag" -> "a"))
+    assert(live.matches == 14L, "an unarmed store plans from the live count")
+    fs.delete(blocker, false)
+    cat.refreshMetaStats("u", "pa")
+    assert(counts == Seq(Some(14L), Some(6L)))
+
+    // partially armed: epochs 0 and 2 have slices, epoch 1 lost its own.
+    // The vacuum folds {0, 1} and keeps 2 — folding slice 0 alone would
+    // leave a complete-looking set that has lost the b counts
+    fs.delete(statsSlice(cat, "pa", 1L), true)
+    assert(counts == Seq(None, None))
+    cat.vacuum("u", "pa", keepLast = 1)
+    assert(counts == Seq(None, None), "a vacuum must leave the store unarmed")
+    cat.refreshMetaStats("u", "pa")
+    assert(counts == Seq(Some(14L), Some(6L)))
+
+    // a delete of a partially-armed store, with an orphan slice waiting at
+    // the replace epoch: the unarmed replace removes it
+    val kept = cat.epochs("u", "pa")
+    fs.delete(statsSlice(cat, "pa", kept.last), true)
+    val next = kept.max + 1
+    Seq(("tag", "a", 999L)).toDF("key", "value", "n")
+      .write.parquet(statsSlice(cat, "pa", next).toString)
+    assert(cat.deleteVectors("u", "pa", element_at(col("meta"), "tag") === "b") == 6L)
+    assert(cat.epochs("u", "pa") == Seq(next))
+    assert(counts == Seq(None, None), "a delete must leave the store unarmed")
+    cat.refreshMetaStats("u", "pa")
+    assert(counts == Seq(Some(14L), Some(0L)))
+
+    // an optimize of a partially-armed store
+    cat.addVectors("u", "pa", batch(2, "b"))
+    fs.delete(statsSlice(cat, "pa", next), true)
+    cat.optimize("u", "pa")
+    assert(counts == Seq(None, None), "an optimize must leave the store unarmed")
+    assert(cat.refreshMetaStats("u", "pa") == 2L)
+    assert(counts == Seq(Some(14L), Some(2L)))
+    assert(statsEpochs(cat, "pa") == cat.epochs("u", "pa"))
   }
 
   test("queryAdaptiveTyped: typed predicate cardinality plans the path; " +
